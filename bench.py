@@ -32,245 +32,13 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import __spark_entry__ as entry
 from staticql_spark.session import get_spark
 
-# HEADLINE covers 185 of the 255 registered queries (r11).  The 70 excluded
-# keys are the long-stable set benched to convergence in earlier rounds
-# (r1-r4): the TPC-H group-C shapes and small staticql-parity lookups
-# (where_eq/point_lookup/...), simple set/pivot/window variants, and a
-# few trained-index twins whose cost is the train step already timed via
-# their headline sibling (ann_ivf_trained ~ ann_ivf_pq).  Their per-round
-# numbers stopped moving (BENCH_r1-r4 deltas within host noise) — keeping
-# them out holds the per-round wall-clock near the driver's budget while
-# every operator family keeps at least one headline representative.
-HEADLINE = [
-    "where_and",
-    "has_one_join",
-    "has_many_agg",
-    "belongs_to_join",
-    "through_count",
-    "cursor_after",
-    "pricing_summary",
-    "ship_priority",
-    "market_share",
-    "waiting_supplier",
-    "customer_order_distribution",
-    "topk_per_group",
-    "region_revenue",
-    "agg_distinct",
-    "window_running",
-    "events_windowed",
-    "events_sessionize",
-    "asof_click_purchase",
-    "range_followups",
-    "kmv_distinct",
-    "doc_quality",
-    "doc_lang",
-    "doc_pii",
-    "doc_decontaminate",
-    "doc_selfdedup",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "ann_cosine_topk",
-    "ann_ivf",
-    "stream_first_seen",
-    # new in r4
-    "asof_hotkey_bucketed",
-    "dedup_incremental",
-    "doc_rebalance",
-    "doc_pack",
-    # added to the headline set in r5 (per the r4 verdict): the remaining
-    # composed/new queries.  NOTE for cross-round comparison: the headline
-    # set grew 35 -> 41 here, so compare per-query times (or the r4 subset
-    # sum), not raw totals.  pipeline_clean_corpus is the end-to-end
-    # composition of stages also benched individually above.
-    "pipeline_clean_corpus",
-    "doc_split_leakfree",
-    "events_funnel",
-    "bpe_pair_counts",
-    "doc_unigram_nll",
-    "doc_curriculum",
-    # new operators in r5 (set is now 46; compare per-query across rounds)
-    "events_pagerank",
-    "doc_weighted_sample",
-    "doc_token_entropy",
-    "kmv_union",
-    "events_sequences",
-    "fuzzy_match",
-    "table_profile",
-    "zorder_layout",
-    "price_histogram",
-    "skew_report",
-    "doc_training_manifest",
-    "ann_recall",
-    "ann_hybrid_rrf",
-    "events_next_prediction",
-    "scd2_history",
-    "corpus_diff",
-    "corr_matrix",
-    # added mid-r5 with their operators (set is now 53)
-    "bpe_train",
-    "bpe_encode",
-    "doc_logreg",
-    "dedup_lsh_recall",
-    "doc_decontaminate_bloom",
-    "dedup_semantic",
-    "dedup_semantic_keep",
-    "events_anomaly",
-    "customer_rfm",
-    "events_markov",
-    # added late-r5 with their operators (set is now 61)
-    "events_retention",
-    "dedup_cluster_stats",
-    "embedding_top_pc",
-    "langid_confusion",
-    "quality_quantile_norm",
-    "events_decayed",
-    "doc_gopher",
-    "dedup_semantic_incr",
-    "doc_dup_spans",
-    "doc_dup_excise",
-    "doc_dup_spans_anchored",
-    # added in the second half of r5 (set is now 85)
-    "doc_source_cap",
-    "doc_dsir",
-    "ann_knn_classify",
-    "doc_mixture_epochs",
-    "events_attribution",
-    "pipeline_curate_mixture",
-    # new in r6 (set is now 97)
-    "stream_kmv",
-    "kmv_grouped",
-    "dedup_canonical_meta",
-    "dedup_containment",
-    "doc_term_pmi",
-    "doc_bigram_nll",
-    "events_cooccurrence",
-    "ann_hard_negatives",
-    "ann_cell_balance",
-    "embedding_class_sep",
-    "doc_length_budget",
-    "doc_vocab_coverage",
-    # late-r6 operators (set is now 128)
-    "ann_pq_adc",
-    "ann_ivf_pq",
-    "stream_pq_neardup",
-    "embedding_prototypes",
-    "doc_training_order",
-    "doc_temperature_mix",
-    "events_kanon",
-    "embedding_drift",
-    "ann_label_noise",
-    "multimodal_ahash",
-    "exact_percentiles",
-    "multimodal_audio_hash",
-    "fd_discovery",
-    "ri_report",
-    "dedup_chunk_incremental",
-    "kmv_join_estimate",
-    "events_bot_score",
-    "doc_vocab_drift",
-    "pipeline_media_manifest",
-    "dedup_triangles",
-    "events_ppr",
-    "ann_pq_recall",
-    "supplier_pareto",
-    "doc_ccnet_buckets",
-    "ann_ivfpq_recall",
-    # new in r8: partition-pruned probe of the persisted IVFADC index
-    "ann_ivfpq_persisted",
-    "events_cohort_ltv",
-    "grouped_percentiles",
-    "robust_outliers",
-    "doc_chunk_dedup",
-    "doc_shuffle_shards",
-    "bpe_fertility",
-    "kmeans_inertia",
-    "doc_ngram_coverage",
-    "shard_checksums",
-    "events_dau_wau",
-    "events_time_to_convert",
-    "checksum_delta",
-    "doc_dedup_funnel",
-    "events_lpa",
-    "stream_shard_ck",
-    "dedup_minhash_1bit",
-    "orders_backlog",
-    "ann_rnn_pairs",
-    "quality_gate_report",
-    "events_forecast_baseline",
-    "events_lpa_incr",
-    "doc_decontaminate_excise",
-    "pipeline_release_manifest",
-    "hll_distinct",
-    "hll_union",
-    "events_seasonality",
-    "events_ldiversity",
-    "doc_vocab_growth",
-    "source_ablation",
-    # new in r7
-    "events_retention_curve",
-    "events_funnel_steps",
-    "profile_psi",
-    "ann_semantic_decon",
-    "hll_grouped_ndv",
-    "events_attribution_lasttouch",
-    "stream_transitions",
-    "embedding_debias",
-    "profile_psi_by_lang",
-    "stream_funnel",
-    "events_session_paths",
-    "doc_calibration",
-    "ann_pq_quant_error",
-    "doc_contamination_by_source",
-    "stream_psi",
-    "events_funnel_windowed",
-    # new in r9
-    "embedding_mrl_recall",
-    "events_ab_cuped",
-    "events_bt_ratings",
-    "events_win_matrix",
-    "events_rater_agreement",
-    "events_tcloseness",
-    "events_quantile_sketch",
-    "stream_qsketch",
-    "events_bt_reliability",
-    "events_rater_consensus",
-    # new in r10
-    "events_bt_ties",
-    "events_rater_bias",
-    "events_arena_sliding",
-    # new in r11
-    "events_krippendorff",
-    "ann_rbo",
-    "doc_auc",
-    "stream_arena",
-    # new in r12
-    "ann_mrr",
-    "events_mann_kendall",
-    "doc_zipf",
-    "stream_consensus",
-    "ann_ndcg",
-    "events_cusum",
-    "events_benford",
-    "doc_simpson",
-    # new in r13
-    "stream_rater_severity",
-    "doc_gini",
-    "ann_kendall_tau",
-    "events_theil_sen",
-    "events_rater_confusion",
-]
-
-# BENCH_EXEMPT: the ONLY registry keys allowed to be absent from HEADLINE —
-# the long-stable set benched to convergence in r1-r4 (rationale in the
-# HEADLINE comment above: TPC-H group-C shapes, small staticql-parity
-# lookups, simple set/pivot/window variants, trained-index twins whose
-# cost is already timed via a headline sibling).  This list is EXPLICIT so
-# tests/test_bench_contract.py can enforce that a newly registered query
-# can never silently fall into the un-benched gap: every queries() key
-# must be in HEADLINE or placed here deliberately (with the r-note below).
+# BENCH_EXEMPT: the registry keys left out of the headline run.  They are
+# the long-stable set whose numbers stopped moving between early runs:
+# the TPC-H group-C shapes, small staticql-parity lookups
+# (where_eq/point_lookup/...), simple set/pivot/window variants, and a few
+# trained-index twins whose cost is the train step already timed via
+# their headline sibling (ann_ivf_trained ~ ann_ivf_pq).
 BENCH_EXEMPT = [
-    # r1-r4 convergence set (70 keys, frozen r8)
     "ann_ivf_trained", "ann_lsh", "ann_quantized", "anti_join",
     "brand_supplier_count", "cheapest_supplier", "cm_heavy_hitters",
     "conditional_pivot", "corpus_report", "cube_rollup", "cursor_before",
@@ -294,27 +62,27 @@ BENCH_EXEMPT = [
     "where_in", "where_startswith",
 ]
 
-# CORE: the stable subset whose per-query numbers ride in the compact
-# stdout line every round (cross-round comparable since r1-r3) plus the
-# perf-watch queries named by round verdicts.  The FULL set's numbers are
-# in BENCH_FULL.json.
-CORE = HEADLINE[:35] + [
-    "doc_training_manifest",
-    "dedup_semantic_keep",
-    "dedup_semantic",
-    "doc_split_leakfree",
-    "pipeline_clean_corpus",
-    "pipeline_curate_mixture",
-    "dedup_cluster_stats",
-    "events_pagerank",
-    "bpe_train",
-    "doc_logreg",
-    # new in r9
-    "embedding_mrl_recall",
-    "events_ab_cuped",
-    "events_bt_ratings",
-    "events_rater_agreement",
-    "events_tcloseness",
+# HEADLINE: every other registry key, in registry order.
+HEADLINE = [k for k in entry.queries() if k not in BENCH_EXEMPT]
+
+# CORE: the fixed subset whose per-query numbers ride in the compact
+# stdout line, so that line stays comparable across runs.  The FULL set's
+# numbers are in BENCH_FULL.json.
+CORE = [
+    "where_and", "has_one_join", "has_many_agg", "belongs_to_join",
+    "through_count", "cursor_after", "pricing_summary", "ship_priority",
+    "market_share", "waiting_supplier", "customer_order_distribution",
+    "topk_per_group", "region_revenue", "agg_distinct", "window_running",
+    "events_windowed", "events_sessionize", "asof_click_purchase",
+    "range_followups", "kmv_distinct", "doc_quality", "doc_lang", "doc_pii",
+    "doc_decontaminate", "doc_selfdedup", "dedup_exact", "dedup_minhash_lsh",
+    "dedup_simhash", "ann_cosine_topk", "ann_ivf", "stream_first_seen",
+    "asof_hotkey_bucketed", "dedup_incremental", "doc_rebalance", "doc_pack",
+    "doc_training_manifest", "dedup_semantic_keep", "dedup_semantic",
+    "doc_split_leakfree", "pipeline_clean_corpus", "pipeline_curate_mixture",
+    "dedup_cluster_stats", "events_pagerank", "bpe_train", "doc_logreg",
+    "embedding_mrl_recall", "events_ab_cuped", "events_bt_ratings",
+    "events_rater_agreement", "events_tcloseness",
 ]
 
 

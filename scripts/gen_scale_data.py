@@ -1,5 +1,5 @@
-"""Generate a LARGER synthetic SF directory from sf0.1 for the r14
-scaling spot-check (r13 verdict #6) — NOT for correctness runs.
+"""Generate a LARGER synthetic SF directory from sf0.1 for the scaling
+spot-check (scripts/scale_spot.py) — NOT for correctness runs.
 
 /root/testdata is read-only and driver-owned; this script derives a
 bigger dataset purely from sf0.1 by unioning FACTOR id-shifted copies of
@@ -14,7 +14,7 @@ stay comparable to sf0.1 within a copy).
 Usage: python scripts/gen_scale_data.py [factor] [out_dir]
        (defaults: 5 -> "sf0.5", /tmp/scale_sf05)
 
-The output feeds scripts/scale_spot_r14.py only; nothing here touches
+The output feeds scripts/scale_spot.py only; nothing here touches
 the oracle or the bench contract.
 """
 

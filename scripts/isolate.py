@@ -1,11 +1,13 @@
-"""r13 optimization round: isolate named queries with the noop sink.
+"""Isolate named queries with the noop sink.
 
-Usage: python scripts/isolate_r13.py [--tag before|after] [--plans] q1 q2 ...
+Usage: python scripts/isolate.py [--tag before|after] [--plans] q1 q2 ...
 
-For each named query: 3 reps of (construct, noop-exec), printed per rep,
-plus optional .explain("formatted") dump to plans/r13/<q>_<tag>.txt.
+For each named query: N reps of (construct, noop-exec), printed per rep,
+plus optional .explain("formatted") dump to plans/<q>_<tag>.txt.
 Artifacts are built up front (untimed) exactly as bench.py does, so the
-numbers isolate the query itself.
+numbers isolate the query itself.  As in bench.py, the operator persist
+registry is released before every rep, so each rep is self-contained
+(rep 0 additionally eats one-time codegen compile).
 """
 
 from __future__ import annotations
@@ -18,6 +20,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry
+from staticql_spark.operators import release_persists
 from staticql_spark.session import get_spark
 
 
@@ -30,7 +33,7 @@ def main() -> None:
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("isolate-r13")
+    spark = get_spark("isolate")
     spark.sparkContext.setLogLevel("ERROR")
 
     import glob
@@ -43,7 +46,7 @@ def main() -> None:
 
     qs = entry.queries()
     plans_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r13"
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans"
     )
     os.makedirs(plans_dir, exist_ok=True)
 
@@ -53,6 +56,7 @@ def main() -> None:
             continue
         spark.sparkContext.setJobDescription(f"isolate:{name}")
         for rep in range(args.reps):
+            release_persists()
             t0 = time.perf_counter()
             df = qs[name](spark, sf_dir)
             t1 = time.perf_counter()

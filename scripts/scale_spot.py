@@ -1,16 +1,16 @@
-"""r14 scaling spot-check (r13 verdict #6): run the heavy keys at a
-LARGER synthetic SF (scripts/gen_scale_data.py output) at two core
-counts and report the 8-core/32-core exec ratio per key.
+"""Scaling spot-check: run the heavy keys at a LARGER synthetic SF
+(scripts/gen_scale_data.py output) at two core counts and report the
+8-core/32-core exec ratio per key.
 
 At sf0.1 every benched key sits at or below the local[32] per-stage
-scheduling floor (the r13 PERF scaling block read <=1 everywhere), so
-this is the first empirical evidence of parallel scaling.  Each core
-count runs in its OWN subprocess so `local[N]` and defaultParallelism
-are honest; reps follow the r14 self-contained policy (registry released
-per rep) and we take min-of-reps per (key, cpus).
+scheduling floor, so sf0.1 numbers say nothing about parallel scaling.
+Each core count runs in its OWN subprocess (scripts/isolate.py) so
+`local[N]` and defaultParallelism are honest; reps are self-contained
+(persist registry released per rep) and we take min-of-reps per
+(key, cpus).
 
-Usage: python scripts/scale_spot_r14.py [sf_dir] [keys...]
-Writes SCALE_SPOT_r14.json next to the repo root and prints a table.
+Usage: python scripts/scale_spot.py [sf_dir] [keys...]
+Writes SCALE_SPOT.json next to the repo root and prints a table.
 """
 
 from __future__ import annotations
@@ -35,7 +35,7 @@ DEFAULT_KEYS = [
 def run(cpus: int, sf_dir: str, keys: list[str]) -> dict[str, float]:
     env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus), SPARK_GRAFT_SF_DIR=sf_dir)
     p = subprocess.run(
-        [sys.executable, os.path.join(HERE, "isolate_r14.py"), "--reps", "3", *keys],
+        [sys.executable, os.path.join(HERE, "isolate.py"), "--reps", "3", *keys],
         env=env, capture_output=True, text=True, cwd=ROOT,
     )
     out: dict[str, list[float]] = {}
@@ -65,7 +65,7 @@ def main() -> None:
     print("|---|---|---|---|")
     for k, a, b, r in rows:
         print(f"| {k} | {a:.2f} | {b:.2f} | {r} |")
-    with open(os.path.join(ROOT, "SCALE_SPOT_r14.json"), "w") as f:
+    with open(os.path.join(ROOT, "SCALE_SPOT.json"), "w") as f:
         json.dump(
             {"sf_dir": sf_dir, "keys": {k: {"c32": a, "c8": b, "ratio": r}
                                         for k, a, b, r in rows}},

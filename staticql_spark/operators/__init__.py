@@ -32,14 +32,9 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     undercounts splits for multi-row-group files (worst case: one redundant
     repartition of an input small enough to sit in one file), and returns
     [] for non-file sources, which pass through untouched — local
-    createDataFrame inputs are already sliced to defaultParallelism. On a
-    cluster where even the file listing is unwanted, set
-    ``spark.staticql.ensureParallelism=off`` to make this a no-op.
+    createDataFrame inputs are already sliced to defaultParallelism.
     """
-    spark = df.sparkSession
-    if spark.conf.get("spark.staticql.ensureParallelism", "auto") == "off":
-        return df
-    target = spark.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
         files = df.inputFiles()
     except Exception:  # streaming sources raise; never block the pipeline

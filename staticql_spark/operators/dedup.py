@@ -610,9 +610,9 @@ def incremental_lsh_pairs(
     verify_jaccard rationale).
 
     ``reduce_old`` gates reductions (2)+(3) — the r10 sf0.1 bisect
-    (`scripts/ab_incr_sf01_bisect.py`, row-identical outputs across all
-    three forms) attributed the bench gap vs r8 ENTIRELY to them (r8
-    form 2.5-2.8 s, reduced form 5.1-5.5 s interleaved at sf0.1): at
+    (SCALE.md, row-identical outputs across all three forms) attributed
+    the bench gap vs r8 ENTIRELY to them (r8 form 2.5-2.8 s, reduced
+    form 5.1-5.5 s interleaved at sf0.1): at
     toy corpus scale the extra semi/anti exchanges cost more than the
     old-side text they avoid reading, while at the 500k soak they are
     the batch-proportional contract itself.  Default ``None`` decides

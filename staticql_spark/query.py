@@ -91,7 +91,10 @@ class QueryBuilder:
     orderBy = order_by  # reference-style alias
 
     def page_size(self, n: int) -> "QueryBuilder":
-        self._page_size = int(n)
+        n = int(n)
+        if n < 1:
+            raise ValueError(f"page size must be >= 1, got {n}")
+        self._page_size = n
         return self
 
     pageSize = page_size

@@ -1,5 +1,5 @@
-"""Unified snapshot facade over the persisted-index family (PLANS.md r9
-roadmap item: "one naming scheme for every persisted index").
+"""Unified snapshot facade over the persisted-index family: one naming
+scheme for every persisted index.
 
 A production deployment stores three kinds of corpus-derived artifacts —
 the MinHash-LSH index (``dedup.lsh_build``), the PQ/IVFADC index

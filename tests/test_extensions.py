@@ -251,9 +251,8 @@ def test_cli_export_shards_jsonl(spark, content_dir, tmp_path, capsys):
 
 @pytest.mark.slow  # soak-grade: excluded from the default gate (pytest.ini)
 def test_snapshot_facade_roundtrip_and_integrity(spark, tmp_path):
-    # r9 (PLANS.md roadmap #2): one build/load/verify surface for every
-    # persisted index kind, with an XOR-digest manifest that catches a
-    # mutated frame
+    # one build/load/verify surface for every persisted index kind, with
+    # an XOR-digest manifest that catches a mutated frame
     import pyspark.sql.functions as F
 
     from staticql_spark import snapshots

@@ -3239,8 +3239,8 @@ def test_tcloseness_degenerate_and_nulls(spark):
 
 def test_incremental_lsh_reduce_old_paths_identical(spark):
     # r10: the probe reductions are gated on index size (reduce_old);
-    # both paths must emit IDENTICAL pairs — the bisect that justified
-    # the gate (scripts/ab_incr_sf01_bisect.py) as a permanent lock
+    # both paths must emit IDENTICAL pairs — the sf0.1 bisect that
+    # justified the gate (SCALE.md) as a permanent lock
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     old = docs.filter(F.col("doc_id") % 5 != 0)
     new = docs.filter(F.col("doc_id") % 5 == 0)

@@ -199,6 +199,14 @@ def test_garbage_cursor_rejected(herbal):
         herbal.from_("herbs").cursor("!!!garbage!!!").exec()
 
 
+@pytest.mark.parametrize("n", [0, -1, -2])
+def test_non_positive_page_size_rejected(herbal, n):
+    # 0/-1 used to return an empty page with has_next_page=True and no
+    # end cursor; <= -2 failed inside Spark with a raw LIMIT error
+    with pytest.raises(ValueError, match="page size must be >= 1"):
+        herbal.from_("herbs").page_size(n)
+
+
 def test_slug_mismatch_is_load_error(spark, tmp_path):
     # single-record file whose embedded slug disagrees with the path-derived
     # slug must fail the load (reference: src/SourceLoader.ts:163-169)
@@ -401,8 +409,8 @@ def test_driver_contract_registry_is_total():
     assert set(q) == set(o), set(q) ^ set(o)
     assert all(callable(f) for f in q.values())
     assert all(isinstance(s, str) and "SELECT" in s.upper() for s in o.values())
-    # the driver's correctness gate reads the FIRST 50 keys: they must be
-    # the rotation window COVERAGE.md describes (never-checked keys first)
+    # the driver's correctness gate reads the FIRST 50 keys in insertion
+    # order, so a new or changed key goes at the front of queries()
     head = list(q)[:50]
     assert len(head) == 50
 
