@@ -2295,27 +2295,31 @@ def q_events_next_prediction(spark, sf):
     )
 
 
-def q_ann_recall(spark, sf):
-    # ANN self-evaluation (new r5): recall@5 of the IVF path against the
-    # exact brute-force top-5 over the same query set — the metric that
-    # justifies (or vetoes) an approximate index in a retrieval pipeline.
-    # One semi join between the two result sets, 1-row summary.
+def _ivf_vs_exact(spark, sf):
+    # The shared IVF-vs-exact ranking pair (approx, exact) behind every
+    # ranking-eval key: stride-50 queries, top-5 on both paths, nprobe 3.
+    # The Spark twin of the oracle's _IVF_VS_EXACT_CTES, so the
+    # derivation cannot drift between keys on either engine.
     emb = _t(spark, sf, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
-    # exact is consumed twice (the semi-join probe + n_exact_pairs):
-    # pinned so the brute-force pass runs once (r13). |Q|·k rows.
-    exact = dedup._persist_scoped(
-        similarity.cosine_topk(queries, emb, k=5).select(
-            "query_id", "neighbor_id"
-        )
-    )
-    approx = similarity.ivf_topk(queries, emb, k=5, nprobe=3).select(
-        "query_id", "neighbor_id"
-    )
-    hits = approx.join(exact, ["query_id", "neighbor_id"], "left_semi")
     return (
-        exact.agg(F.count("*").alias("n_exact_pairs"))
-        .crossJoin(hits.agg(F.count("*").alias("n_hits")))
+        similarity.ivf_topk(queries, emb, k=5, nprobe=3),
+        similarity.cosine_topk(queries, emb, k=5),
+    )
+
+
+def q_ann_recall(spark, sf):
+    # ANN self-evaluation: recall@5 of the IVF path against the exact
+    # brute-force top-5 over the same query set — the metric that
+    # justifies (or vetoes) an approximate index in a retrieval pipeline.
+    # One global aggregate over the rank_overlap of the two result sets.
+    both = F.col("rank_a").isNotNull() & F.col("rank_b").isNotNull()
+    return (
+        similarity.rank_overlap(*_ivf_vs_exact(spark, sf))
+        .agg(
+            F.count("rank_b").alias("n_exact_pairs"),
+            F.count(F.when(both, 1)).alias("n_hits"),
+        )
         .select(
             "n_exact_pairs",
             "n_hits",
@@ -4377,17 +4381,11 @@ def q_events_krippendorff(spark, sf):
 
 def q_ann_rbo(spark, sf):
     # rank-biased overlap of the IVF ranking vs the exact brute-force
-    # ranking (new r11): the rank-SENSITIVE companion to ann_recall —
-    # recall@5 counts set hits, RBO@5 (p=0.9) additionally penalizes
-    # order disagreement, the metric that catches an ANN index that
-    # returns the right set in the wrong order.  One (query, item) equi
-    # join of two top-5 result sets + per-query sum; per-depth weights
-    # are a 5-entry literal lookup.
-    emb = _t(spark, sf, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 50 == 0)
-    exact = similarity.cosine_topk(queries, emb, k=5)
-    approx = similarity.ivf_topk(queries, emb, k=5, nprobe=3)
-    return similarity.rbo_overlap(approx, exact, p=0.9, k=5)
+    # ranking: the rank-SENSITIVE companion to ann_recall — recall@5
+    # counts set hits, RBO@5 (p=0.9) additionally penalizes order
+    # disagreement, the metric that catches an ANN index that returns
+    # the right set in the wrong order.
+    return similarity.rbo_overlap(*_ivf_vs_exact(spark, sf), p=0.9, k=5)
 
 
 def q_doc_auc(spark, sf):
@@ -4435,31 +4433,19 @@ def q_stream_arena(spark, sf):
 
 
 def q_ann_mrr(spark, sf):
-    # mean-reciprocal-rank leg of the ranking-eval triad (new r12):
-    # recall@5 counts set hits, RBO discounts order disagreement, MRR
-    # grades only how early the FIRST exact-top-5 item appears in the
-    # IVF ranking — the metric for retrieval feeding a one-answer
-    # consumer.  One (query, item) equi join of two top-5 lists + a
-    # per-query min; the same IVF-vs-exact pairing as ann_rbo so the
-    # three legs read side by side.
-    emb = _t(spark, sf, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 50 == 0)
-    exact = similarity.cosine_topk(queries, emb, k=5)
-    approx = similarity.ivf_topk(queries, emb, k=5, nprobe=3)
-    return similarity.mrr_first_hit(approx, exact)
+    # mean-reciprocal-rank leg of the ranking-eval suite: recall@5
+    # counts set hits, RBO discounts order disagreement, MRR grades only
+    # how early the FIRST exact-top-5 item appears in the IVF ranking —
+    # the metric for retrieval feeding a one-answer consumer.
+    return similarity.mrr_first_hit(*_ivf_vs_exact(spark, sf))
 
 
 def q_ann_ndcg(spark, sf):
-    # NDCG@5 of the IVF ranking vs the exact ranking (new r12): the
-    # graded fourth leg of the ranking-eval suite — relevance derived
-    # from the exact rank (top item gain 5 .. 1), position discount
-    # log2(1+rank), ideal DCG a driver-side literal.  Same shared
-    # IVF-vs-exact pairing and one-equi-join shape as ann_rbo/ann_mrr.
-    emb = _t(spark, sf, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 50 == 0)
-    exact = similarity.cosine_topk(queries, emb, k=5)
-    approx = similarity.ivf_topk(queries, emb, k=5, nprobe=3)
-    return similarity.ndcg_overlap(approx, exact, k=5)
+    # NDCG@5 of the IVF ranking vs the exact ranking: the graded leg of
+    # the ranking-eval suite — relevance derived from the exact rank
+    # (top item gain 5 .. 1), position discount log2(1+rank), ideal DCG
+    # a driver-side literal.
+    return similarity.ndcg_overlap(*_ivf_vs_exact(spark, sf), k=5)
 
 
 def q_events_cusum(spark, sf):
@@ -4601,18 +4587,10 @@ def q_doc_gini(spark, sf):
 
 
 def q_ann_kendall_tau(spark, sf):
-    # Kendall's tau over the IVF-vs-exact overlap (new r13): the fifth
-    # leg of the ranking-eval suite — symmetric ORDER correlation of the
-    # shared items, where recall counts hits and RBO/MRR/NDCG weight
-    # top-down.  Same shared IVF-vs-exact pairing as ann_rbo/ann_mrr/
-    # ann_ndcg; per-query pair expansion bounded by C(5,2).
-    from staticql_spark.operators.similarity import kendall_tau_overlap
-
-    emb = _t(spark, sf, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 50 == 0)
-    exact = similarity.cosine_topk(queries, emb, k=5)
-    approx = similarity.ivf_topk(queries, emb, k=5, nprobe=3)
-    return kendall_tau_overlap(approx, exact)
+    # Kendall's tau over the IVF-vs-exact overlap: the symmetric ORDER
+    # correlation of the shared items, where recall counts hits and
+    # RBO/MRR/NDCG weight top-down.
+    return similarity.kendall_tau_overlap(*_ivf_vs_exact(spark, sf))
 
 
 def q_events_theil_sen(spark, sf):
@@ -10495,8 +10473,8 @@ _ARENA_S = 2 * 86400 * 1_000_000
 # Shared IVF-vs-exact ranking derivation (q .. ivfk), the ann_recall
 # recipe with rank KEPT: stride-50 queries, stride-100 centroids,
 # nprobe 3, top-5 both paths, 6dp-rounded cosine with neighbor-id
-# tiebreak.  ONE source for every ranking-eval oracle (ann_rbo r11,
-# ann_mrr r12) so the derivation can never drift between legs.
+# tiebreak.  ONE source for every ranking-eval oracle (the Spark side's
+# is _ivf_vs_exact) so the derivation can never drift between legs.
 _IVF_VS_EXACT_CTES = """q AS (
               SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
               FROM embeddings WHERE vec_id % 50 = 0

@@ -1490,6 +1490,34 @@ def rbo_weights(p: float, k: int) -> list[float]:
     return out
 
 
+def rank_overlap(a: DataFrame, b: DataFrame) -> DataFrame:
+    """Two ranked lists side by side -> (query_id, neighbor_id, rank_a,
+    rank_b): ONE full outer equi join on (query_id, neighbor_id).
+
+    Inputs need (query_id, neighbor_id, rank) — the cosine_topk /
+    ivf_topk / rrf_fuse shape.  Ranks come out as ``long``; a rank is
+    NULL where the item is absent from that list.  So the rows with both
+    ranks present are exactly the overlap (the inner join), and every
+    query present in either list keeps at least one row — grouping by
+    query_id emits each such query once, zero-overlap queries included.
+    The ranking metrics below (and ``ann_recall``) are each one
+    aggregate over this frame, so each input is read once.
+    """
+
+    def side(df: DataFrame, rank: str) -> DataFrame:
+        return df.select(
+            "query_id", "neighbor_id", F.col("rank").cast("long").alias(rank)
+        )
+
+    return side(a, "rank_a").join(
+        side(b, "rank_b"), ["query_id", "neighbor_id"], "full"
+    )
+
+
+def _both_ranked() -> Column:
+    return F.col("rank_a").isNotNull() & F.col("rank_b").isNotNull()
+
+
 def rbo_overlap(
     a: DataFrame,
     b: DataFrame,
@@ -1505,59 +1533,32 @@ def rbo_overlap(
     that retrieve the same set in different orders score < 1):
     ``rbo = (1-p) * sum_{d=1..k} p^(d-1) * |A_1..d ∩ B_1..d| / d``.
 
-    Shape: the depth sum is re-indexed per ITEM — an item ranked r_a in
-    A and r_b in B joins both prefixes from depth m = max(r_a, r_b)
-    onward, so its total contribution is ``w[m] = sum_{d=m..k}
-    p^(d-1)/d``, a k-entry literal lookup (:func:`rbo_weights`).  That
-    turns the per-depth intersection into ONE (query, item) equi join of
-    the two k-row-per-query lists + one per-query sum — no per-depth
-    loop, no window over raw rows, and the shuffle carries only top-k
-    result sets (the rrf_fuse cost profile).
+    The depth sum is re-indexed per ITEM — an item ranked r_a in A and
+    r_b in B joins both prefixes from depth m = max(r_a, r_b) onward, so
+    its total contribution is ``w[m] = sum_{d=m..k} p^(d-1)/d``, a
+    k-entry literal lookup (:func:`rbo_weights`).
 
-    Inputs need (query_id, neighbor_id, rank) with rank 1..k (the shape
-    cosine_topk / ivf_topk / rrf_fuse emit).  Queries present in either
-    list but with ZERO overlapping items emit rbo = 0.0 (full outer on
-    query presence via the id-set union).  Per-item weights are
-    9dp-rounded and folded in DECIMAL(38,9); the result is rounded
-    ``out_round`` — the repo-wide engine-stable fold.
+    Shape: :func:`rank_overlap` + one per-query sum of ``w[m]`` over the
+    overlap rows.  Inputs need (query_id, neighbor_id, rank) with rank
+    1..k.  Queries present in either list but with ZERO overlapping
+    items emit rbo = 0.0.  Per-item weights are 9dp-rounded and folded in
+    DECIMAL(38,9); the result is rounded ``out_round`` — the repo-wide
+    engine-stable fold.
     """
-    w = rbo_weights(p, k)
-    from . import _persist_scoped
-
     wmap = F.map_from_arrays(
-        F.array(*[F.lit(m) for m in range(1, k + 1)]),
-        F.array(*[F.lit(x) for x in w]),
+        F.array(*[F.lit(m).cast("long") for m in range(1, k + 1)]),
+        F.array(*[F.lit(x) for x in rbo_weights(p, k)]),
     )
-    # Each input is consumed twice (the hits join + the query-id union),
-    # and each is a whole retrieval pipeline — unpinned, both pipelines
-    # re-ran once per consumer (r13, the kendall_tau finding).  The
-    # pinned frames are k-rows-per-query result sets, bounded.
-    ra = _persist_scoped(
-        a.select("query_id", "neighbor_id", F.col("rank").alias("rank_a"))
-    )
-    rb = _persist_scoped(
-        b.select("query_id", "neighbor_id", F.col("rank").alias("rank_b"))
-    )
-    hits = ra.join(rb, ["query_id", "neighbor_id"]).select(
-        "query_id",
-        F.greatest("rank_a", "rank_b").alias("m"),
-    )
-    contrib = hits.select(
-        "query_id",
-        F.round(wmap[F.col("m")], 9).cast("decimal(38,9)").alias("wm"),
-    )
-    qs = (
-        ra.select("query_id")
-        .unionByName(rb.select("query_id"))
-        .distinct()
-    )
-    per_q = contrib.groupBy("query_id").agg(F.sum("wm").alias("s"))
-    return qs.join(per_q, "query_id", "left").select(
-        "query_id",
-        F.round(
-            F.lit(1.0 - p) * F.coalesce(F.col("s").cast("double"), F.lit(0.0)),
-            out_round,
-        ).alias("rbo"),
+    wm = F.round(wmap[F.greatest("rank_a", "rank_b")], 9).cast("decimal(38,9)")
+    s = F.sum(F.when(_both_ranked(), wm)).cast("double")
+    return (
+        rank_overlap(a, b)
+        .groupBy("query_id")
+        .agg(
+            F.round(F.lit(1.0 - p) * F.coalesce(s, F.lit(0.0)), out_round).alias(
+                "rbo"
+            )
+        )
     )
 
 
@@ -1582,41 +1583,25 @@ def mrr_first_hit(
     dtype-sensitive driver hash), so systemic misses stay visible
     rather than dropped.
 
-    Shape: ONE (query, item) equi join of two k-row-per-query lists +
-    one per-query min — the shuffle carries only top-k result sets,
-    never the corpus (the rbo_overlap cost profile).  rr is a single
-    division off an exact integer rank, rounded once.
+    Shape: :func:`rank_overlap` + one per-query min of rank_a over the
+    rows ``b`` holds.  rr is a single division off an exact integer
+    rank, rounded once.
     """
-    from . import _persist_scoped
-
-    # Both inputs are consumed twice (hits join + query-id union); pin
-    # the k-rows-per-query projections so the upstream retrieval
-    # pipelines run once (r13, the kendall_tau finding).
-    ra = _persist_scoped(
-        a.select("query_id", "neighbor_id", F.col("rank").cast("long").alias("rank_a"))
-    )
-    rb = _persist_scoped(b.select("query_id", "neighbor_id"))
-    first = (
-        ra.join(rb, ["query_id", "neighbor_id"])
+    if "rank" not in b.columns:
+        # a reference SET: a placeholder rank marks membership
+        b = b.withColumn("rank", F.lit(0))
+    first = F.col("first")
+    return (
+        rank_overlap(a, b)
         .groupBy("query_id")
-        .agg(F.min("rank_a").alias("first_hit_rank"))
-    )
-    qs = (
-        ra.select("query_id")
-        .unionByName(rb.select("query_id"))
-        .distinct()
-    )
-    return qs.join(first, "query_id", "left").select(
-        "query_id",
-        F.coalesce(F.col("first_hit_rank"), F.lit(0).cast("long")).alias(
-            "first_hit_rank"
-        ),
-        F.round(
-            F.coalesce(
-                F.lit(1.0) / F.col("first_hit_rank").cast("double"), F.lit(0.0)
-            ),
-            out_round,
-        ).alias("rr"),
+        .agg(F.min(F.when(F.col("rank_b").isNotNull(), F.col("rank_a"))).alias("first"))
+        .select(
+            "query_id",
+            F.coalesce(first, F.lit(0).cast("long")).alias("first_hit_rank"),
+            F.round(
+                F.coalesce(F.lit(1.0) / first.cast("double"), F.lit(0.0)), out_round
+            ).alias("rr"),
+        )
     )
 
 
@@ -1637,58 +1622,35 @@ def ndcg_overlap(
     gain 1, non-members 0).  DCG = sum over overlap items of
     rel / log2(1 + rank_a); the ideal DCG — the reference order scoring
     itself — is the CONSTANT sum_{d=1..k} (k+1-d)/log2(1+d), computed
-    driver-side and inlined as one literal, so the whole metric is ONE
-    (query, item) equi join + a per-query sum (the rbo_overlap cost
-    profile; no per-depth loop, no corpus shuffle).  Zero-overlap
-    queries emit 0.0.  Per-item terms are 9dp-rounded and folded in
-    DECIMAL(38,9); the division by the literal IDCG happens once.
+    driver-side and inlined as one literal.  Zero-overlap queries emit
+    0.0.  Per-item terms are 9dp-rounded and folded in DECIMAL(38,9);
+    the division by the literal IDCG happens once.
 
-    Both inputs are clamped to their top-k rows per query (rank <= k)
-    before the join — a no-op for the contract-conforming top-k inputs,
-    but without it a longer reference list yields NEGATIVE relevances
-    (k + 1 - rank_b < 0) and deep candidate ranks still contribute gain
-    (r12 ADVICE low).
+    Shape: :func:`rank_overlap` + one per-query sum over the overlap
+    rows with BOTH ranks <= k.  That clamp is a no-op for
+    contract-conforming top-k inputs, but without it a longer reference
+    list yields NEGATIVE relevances (k + 1 - rank_b < 0) and deep
+    candidate ranks still contribute gain.  A query whose ranks all
+    exceed k still emits an explicit 0.0 row.
     """
     import math
 
-    from . import _persist_scoped
-
     idcg = sum((k + 1 - d) / math.log2(1 + d) for d in range(1, k + 1))
-    # Both inputs are consumed twice (the rank<=k filter feeding the
-    # hits join + the unfiltered query-id union); pin the projections so
-    # each upstream retrieval pipeline runs once (r13).
-    ra0 = _persist_scoped(
-        a.select("query_id", "neighbor_id", F.col("rank").alias("rank_a"))
-    )
-    rb0 = _persist_scoped(
-        b.select("query_id", "neighbor_id", F.col("rank").alias("rank_b"))
-    )
-    ra = ra0.filter(F.col("rank_a") <= k)
-    rb = rb0.filter(F.col("rank_b") <= k)
-    hits = ra.join(rb, ["query_id", "neighbor_id"]).select(
-        "query_id",
-        F.round(
-            (F.lit(k + 1) - F.col("rank_b")).cast("double")
-            / F.log2(F.lit(1.0) + F.col("rank_a").cast("double")),
-            9,
+    term = F.round(
+        (F.lit(k + 1) - F.col("rank_b")).cast("double")
+        / F.log2(F.lit(1.0) + F.col("rank_a").cast("double")),
+        9,
+    ).cast("decimal(38,9)")
+    in_k = (F.col("rank_a") <= k) & (F.col("rank_b") <= k)
+    s = F.sum(F.when(in_k, term)).cast("double")
+    return (
+        rank_overlap(a, b)
+        .groupBy("query_id")
+        .agg(
+            F.round(F.coalesce(s, F.lit(0.0)) / F.lit(idcg), out_round).alias(
+                "ndcg"
+            )
         )
-        .cast("decimal(38,9)")
-        .alias("term"),
-    )
-    # row-per-query frame from the UNFILTERED inputs: a query whose
-    # ranks all exceed k still emits an (explicit) 0.0 row
-    qs = (
-        ra0.select("query_id")
-        .unionByName(rb0.select("query_id"))
-        .distinct()
-    )
-    per_q = hits.groupBy("query_id").agg(F.sum("term").alias("s"))
-    return qs.join(per_q, "query_id", "left").select(
-        "query_id",
-        F.round(
-            F.coalesce(F.col("s").cast("double"), F.lit(0.0)) / F.lit(idcg),
-            out_round,
-        ).alias("ndcg"),
     )
 
 
@@ -1711,63 +1673,37 @@ def kendall_tau_overlap(
     Queries in either input with overlap < 2 emit (n_overlap, 0, 0,
     0.0) — tau needs at least one comparable pair.
 
-    Shape: ONE (query, item) equi join of two k-row-per-query lists,
-    then a per-query self-join of the OVERLAP rows — at most C(k,2)
-    pairs per query (k=5 -> 10), exact integer counts, one division
-    rounded once.  The shuffle carries only top-k result sets, never
-    the corpus (the rbo_overlap cost profile).
+    Shape: :func:`rank_overlap` + one per-query ``collect_list`` of the
+    overlap (rank_a, rank_b) pairs — at most k per query — whose pairs
+    are counted with ``aggregate``/``filter`` over that array.  Exact
+    integer counts, one division rounded once.
     """
-    from . import _persist_scoped
+    ov = F.collect_list(F.when(_both_ranked(), F.struct("rank_a", "rank_b")))
 
-    # ra/rb are k-rows-per-query result sets but their UPSTREAM is a
-    # whole retrieval pipeline (IVF probe / broadcast cosine scan) —
-    # consumed by hits (x3 via the self-join) plus the query-id union,
-    # an unpinned plan re-ran both pipelines ~4x each (r13: the
-    # ann_kendall_tau before plan held 24 parquet scans, 72 Windows).
-    ra = _persist_scoped(
-        a.select("query_id", "neighbor_id", F.col("rank").cast("long").alias("rank_a"))
-    )
-    rb = _persist_scoped(
-        b.select("query_id", "neighbor_id", F.col("rank").cast("long").alias("rank_b"))
-    )
-    hits = _persist_scoped(
-        ra.join(rb, ["query_id", "neighbor_id"]).select("query_id", "rank_a", "rank_b")
-    )
-    x, y = hits.alias("x"), hits.alias("y")
-    sgn = F.signum((F.col("y.rank_b") - F.col("x.rank_b")).cast("double"))
-    per = (
-        x.join(y, "query_id")
-        .filter(F.col("x.rank_a") < F.col("y.rank_a"))
-        .groupBy("query_id")
-        .agg(
-            F.sum(F.when(sgn > 0, 1).otherwise(0)).cast("long").alias("concordant"),
-            F.sum(F.when(sgn < 0, 1).otherwise(0)).cast("long").alias("discordant"),
+    def count_pairs(ordered) -> Column:
+        # overlap pairs (x, y) with x ahead of y in ``a`` that ``ordered``
+        # accepts; the array holds at most k structs
+        return F.aggregate(
+            "ov",
+            F.lit(0).cast("long"),
+            lambda acc, x: acc
+            + F.size(F.filter("ov", lambda y: (y.rank_a > x.rank_a) & ordered(x, y))),
         )
-    )
-    m = hits.groupBy("query_id").agg(F.count("*").cast("long").alias("n_overlap"))
-    qs = (
-        ra.select("query_id")
-        .unionByName(rb.select("query_id"))
-        .distinct()
-    )
-    pairs_m = (F.col("n_overlap") * (F.col("n_overlap") - 1)).cast("double") / F.lit(
-        2.0
-    )
+
+    n = F.col("n_overlap")
+    pairs_m = (n * (n - 1)).cast("double") / F.lit(2.0)
+    tau = F.when(
+        n >= 2, (F.col("concordant") - F.col("discordant")).cast("double") / pairs_m
+    ).otherwise(F.lit(0.0))
     return (
-        qs.join(m, "query_id", "left")
-        .join(per, "query_id", "left")
+        rank_overlap(a, b)
+        .groupBy("query_id")
+        .agg(ov.alias("ov"))
         .select(
             "query_id",
-            F.coalesce("n_overlap", F.lit(0).cast("long")).alias("n_overlap"),
-            F.coalesce("concordant", F.lit(0).cast("long")).alias("concordant"),
-            F.coalesce("discordant", F.lit(0).cast("long")).alias("discordant"),
-            F.round(
-                F.when(
-                    F.coalesce("n_overlap", F.lit(0)) >= 2,
-                    (F.col("concordant") - F.col("discordant")).cast("double")
-                    / pairs_m,
-                ).otherwise(F.lit(0.0)),
-                out_round,
-            ).alias("tau"),
+            F.size("ov").cast("long").alias("n_overlap"),
+            count_pairs(lambda x, y: y.rank_b > x.rank_b).alias("concordant"),
+            count_pairs(lambda x, y: y.rank_b < x.rank_b).alias("discordant"),
         )
+        .withColumn("tau", F.round(tau, out_round))
     )

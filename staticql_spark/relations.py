@@ -50,15 +50,20 @@ def _record_struct(df: DataFrame) -> Column:
     return F.struct(*[F.col(c) for c in df.columns])
 
 
-def _matches_per_slug(
-    local: DataFrame,
-    local_key: str,
-    foreign: DataFrame,
-    foreign_key: str,
-    broadcast_foreign: bool = True,
-    containment_fallback: bool = False,
-) -> DataFrame:
-    """(slug, matches: array<struct<foreign record>>) for rows with >=1 match.
+def _foreign_rows(foreign: DataFrame, foreign_key: str) -> DataFrame:
+    """Broadcast (_fv, _fslug, _rec): one row per foreign key value."""
+    return F.broadcast(
+        foreign.select(
+            F.explode(_key_values(foreign, foreign_key)).alias("_fv"),
+            F.col("slug").cast("string").alias("_fslug"),
+            _record_struct(foreign).alias("_rec"),
+        )
+    )
+
+
+def _ordered_matches(joined: DataFrame) -> DataFrame:
+    """(slug, _matches: array<struct<foreign record>>) from joined
+    (_lslug, _fv, _fslug, _rec) rows.
 
     The array is ordered by (key value, foreign slug) and deduped by foreign
     slug — the reference's deterministic load order.
@@ -74,32 +79,6 @@ def _matches_per_slug(
     Pinned by tests/test_relations_determinism.py across shuffle-partition
     counts and AQE on/off.
     """
-    lvs = _key_values(local, local_key)
-    lhs = local.select(
-        F.col("slug").alias("_lslug"),
-        (F.size(lvs) > 1).alias("_lmulti"),
-        F.explode(lvs).alias("_lv"),
-    )
-    rhs = foreign.select(
-        F.explode(_key_values(foreign, foreign_key)).alias("_fv"),
-        F.col("slug").cast("string").alias("_fslug"),
-        _record_struct(foreign).alias("_rec"),
-    )
-    if broadcast_foreign:
-        rhs = F.broadcast(rhs)
-    if containment_fallback:
-        # J7 quirk parity (relationResolver.ts:79-89 + findEntriesByPartial
-        # Key :44-56): a MULTI-valued local key probes by substring
-        # containment over foreign keys; single values stay exact. The
-        # containment disjunct makes this a broadcast nested-loop join —
-        # acceptable only because the foreign side is a broadcast-small
-        # content dim; the default exact path stays a hash join.
-        cond = (~F.col("_lmulti") & (lhs["_lv"] == rhs["_fv"])) | (
-            F.col("_lmulti") & rhs["_fv"].contains(lhs["_lv"])
-        )
-    else:
-        cond = lhs["_lv"] == rhs["_fv"]
-    joined = lhs.join(rhs, cond, "inner")
     # dedupe by foreign slug, keep min (key value, slug) as the sort rank
     per_foreign = joined.groupBy("_lslug", "_fslug").agg(
         F.min(F.struct(F.col("_fv"), F.col("_fslug"))).alias("_rank"),
@@ -115,6 +94,36 @@ def _matches_per_slug(
         )
         .withColumnRenamed("_lslug", "slug")
     )
+
+
+def _matches_per_slug(
+    local: DataFrame,
+    local_key: str,
+    foreign: DataFrame,
+    foreign_key: str,
+    containment_fallback: bool = False,
+) -> DataFrame:
+    """(slug, matches) for rows with >=1 match (see :func:`_ordered_matches`)."""
+    lvs = _key_values(local, local_key)
+    lhs = local.select(
+        F.col("slug").alias("_lslug"),
+        (F.size(lvs) > 1).alias("_lmulti"),
+        F.explode(lvs).alias("_lv"),
+    )
+    rhs = _foreign_rows(foreign, foreign_key)
+    if containment_fallback:
+        # J7 quirk parity (relationResolver.ts:79-89 + findEntriesByPartial
+        # Key :44-56): a MULTI-valued local key probes by substring
+        # containment over foreign keys; single values stay exact. The
+        # containment disjunct makes this a broadcast nested-loop join —
+        # acceptable only because the foreign side is a broadcast-small
+        # content dim; the default exact path stays a hash join.
+        cond = (~F.col("_lmulti") & (lhs["_lv"] == rhs["_fv"])) | (
+            F.col("_lmulti") & rhs["_fv"].contains(lhs["_lv"])
+        )
+    else:
+        cond = lhs["_lv"] == rhs["_fv"]
+    return _ordered_matches(lhs.join(rhs, cond, "inner"))
 
 
 def attach_relation(
@@ -185,25 +194,5 @@ def _through_matches(
     # reference resolves value-by-value the same way (every combination of
     # through-FK match and through-LK value probes the target).
 
-    rhs = F.broadcast(
-        target.select(
-            F.explode(_key_values(target, rel.target_foreign_key)).alias("_fv"),
-            F.col("slug").cast("string").alias("_fslug"),
-            _record_struct(target).alias("_rec"),
-        )
-    )
-    joined = hop1.join(rhs, F.col("_tlk") == F.col("_fv"), "inner")
-    per_foreign = joined.groupBy("_lslug", "_fslug").agg(
-        F.min(F.struct(F.col("_fv"), F.col("_fslug"))).alias("_rank"),
-        F.first("_rec").alias("_rec"),
-    )
-    return (
-        per_foreign.groupBy("_lslug")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct(F.col("_rank"), F.col("_rec")))),
-                lambda x: x.getField("_rec"),
-            ).alias("_matches")
-        )
-        .withColumnRenamed("_lslug", "slug")
-    )
+    rhs = _foreign_rows(target, rel.target_foreign_key)
+    return _ordered_matches(hop1.join(rhs, F.col("_tlk") == F.col("_fv"), "inner"))

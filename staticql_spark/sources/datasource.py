@@ -34,8 +34,8 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
-from ..functions import path_to_slug
-from .parsers import parse_by_type
+from .parsers import get_parser
+from .reader import parse_file_records
 
 _DEFAULT_PARALLELISM = 32
 
@@ -82,30 +82,19 @@ class ContentReader(DataSourceReader):
         ]
 
     def read(self, partition: _FileBatch):
-        yield from _parse_files(partition.files, partition.base, self.parser_type)
+        yield from _parse_files(
+            partition.files, partition.base, self.parser_type, self.pattern
+        )
 
 
-def _parse_files(files, base, parser_type):
+def _parse_files(files, base, parser_type, pattern):
+    # the per-file slug rules of every backend, labelled by the glob
+    parser = get_parser(parser_type)
     for path in files:
         with open(path, encoding="utf-8") as f:
             raw = f.read()
         rel = os.path.relpath(path, base) if base else path
-        slug_from_path = path_to_slug(rel)
-        parsed = parse_by_type(parser_type, raw)
-        if isinstance(parsed, list):
-            for rec in parsed:
-                slug = rec.get("slug")
-                if slug is None:
-                    raise ValueError(f"record in {rel} missing explicit slug")
-                yield (str(slug), raw, json.dumps(rec, ensure_ascii=False, default=str))
-        else:
-            embedded = parsed.get("slug")
-            if embedded is not None and str(embedded) != slug_from_path:
-                raise ValueError(
-                    f"slug mismatch in {rel}: file says {embedded!r}, "
-                    f"path says {slug_from_path!r}"
-                )
-            yield (slug_from_path, raw, json.dumps(parsed, ensure_ascii=False, default=str))
+        yield from parse_file_records(parser, pattern, rel, raw)
 
 
 def _glob_base(pattern: str) -> str:
@@ -152,8 +141,9 @@ class ContentStreamReader(SimpleDataSourceStreamReader):
         files = sorted(set(_glob.glob(self.pattern, recursive=True)))
         new = [f for f in files if f not in seen]
         end = {"seen": json.dumps(sorted(seen | set(new)))}
-        return iter(list(_parse_files(new, self.base, self.parser_type))), end
+        rows = list(_parse_files(new, self.base, self.parser_type, self.pattern))
+        return iter(rows), end
 
     def readBetweenOffsets(self, start, end):
         new = sorted(self._seen(end) - self._seen(start))
-        return iter(list(_parse_files(new, self.base, self.parser_type)))
+        return iter(list(_parse_files(new, self.base, self.parser_type, self.pattern)))

@@ -5,6 +5,7 @@ registry sweep stays manual: ``python tests/oracle_harness.py``.
 
 The sample is chosen by rule, not by hand:
 - the operator keys of the benchmark's ``operator_batch`` workload;
+- the keys built on the shared IVF-vs-exact pairing (``RANKING_KEYS``);
 - the first registry key of every prefix family with at least 5 keys
   (``ann``'s is already an operator key);
 - the staticql-surface keys ``where_eq``, ``has_many_agg``, ``cursor_after``.
@@ -22,6 +23,8 @@ OPERATOR_KEYS = [
     "ann_cosine_topk", "ann_knn_classify", "ann_label_noise", "ann_recall",
     "embedding_debias",
 ]
+# keys built on the shared IVF-vs-exact pairing
+RANKING_KEYS = ["ann_recall", "ann_rbo", "ann_mrr", "ann_ndcg", "ann_kendall_tau"]
 SURFACE_KEYS = ["where_eq", "has_many_agg", "cursor_after"]
 
 
@@ -32,7 +35,9 @@ def _family_heads() -> list[str]:
     return [keys[0] for keys in families.values() if len(keys) >= 5]
 
 
-KEYS = list(dict.fromkeys(OPERATOR_KEYS + _family_heads() + SURFACE_KEYS))
+KEYS = list(
+    dict.fromkeys(OPERATOR_KEYS + RANKING_KEYS + _family_heads() + SURFACE_KEYS)
+)
 
 
 @pytest.fixture(scope="module")

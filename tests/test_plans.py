@@ -898,11 +898,17 @@ def test_rater_confusion_single_label_scan_no_cartesian(spark):
     assert specs and all("item#" in s for s in specs), specs
 
 
-def test_kendall_tau_equi_joins_only(spark):
-    # r13: the overlap pair expansion must be equi-join keyed (query_id)
-    # — never a cartesian / nested-loop product of the top-k lists
-    p = plan(entrymod.q_ann_kendall_tau(spark, SF_SMOKE))
+@pytest.mark.parametrize(
+    "key", ["ann_recall", "ann_rbo", "ann_mrr", "ann_ndcg", "ann_kendall_tau"]
+)
+def test_kendall_tau_equi_joins_only(spark, key):
+    # every ranking-eval key is one (query, item) equi join of the two
+    # top-k lists plus an aggregate: never a cartesian product of the
+    # lists (kendall's pair expansion runs inside the per-query array),
+    # and no pinned frame, since each input is read once
+    p = plan(entrymod.queries()[key](spark, SF_SMOKE))
     assert "CartesianProduct" not in p, p
+    assert "InMemoryRelation" not in p and "InMemoryTableScan" not in p, p
 
 
 def test_verify_jaccard_builds_on_shingle_side(spark):
