@@ -2856,14 +2856,7 @@ def q_simhash_pairs(spark, sf):
 def q_ann_cosine_topk(spark, sf):
     emb = _t(spark, sf, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
-    # Pair-count-gated unroll (r14, r13 verdict #2): |Q| = |C|/50 here, so
-    # pairs = |C|^2/50 — 80k at sf0.1, far below the ~1M break-even where
-    # the unrolled kernel's codegen compile pays off (the r13 unroll
-    # regressed this key 0.40->0.61 s).  The estimate is statistics-only
-    # (no job); values are identical either way (unroll is bit-identical).
-    rows = similarity.estimated_rows(emb, row_bytes=8 * 64)
-    unroll = similarity.unroll_for_pairs(rows * rows / 50)
-    return similarity.cosine_topk(queries, emb, k=5, unroll=unroll)
+    return similarity.cosine_topk(queries, emb, k=5)
 
 
 def q_ann_quantized(spark, sf):
@@ -3804,18 +3797,10 @@ def q_ann_knn_classify(spark, sf):
     from staticql_spark.operators.classify import knn_classify
 
     emb = _t(spark, sf, "embeddings")
-    # Pair-count-gated unroll (r14, r13 verdict #2): |Q| ~= |C|/20, so
-    # pairs ~= |C|^2/20 — 190k at sf0.1, below the ~1M break-even (the
-    # r13 unroll regressed this key 0.61->0.87 s).  Statistics-only
-    # estimate; the unroll is bit-identical to the fold, so values never
-    # depend on the gate.
-    rows = similarity.estimated_rows(emb, row_bytes=8 * 64)
-    unroll = similarity.unroll_for_pairs(rows * rows / 20)
     return knn_classify(
         emb.filter(F.col("vec_id") % 20 == 0),
         emb.filter(F.col("vec_id") % 20 != 0),
         k=5,
-        unroll=unroll,
     )
 
 

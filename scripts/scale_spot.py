@@ -1,9 +1,10 @@
 """Scaling spot-check: run the heavy keys at a LARGER synthetic SF
-(scripts/gen_scale_data.py output) at two core counts and report the
-8-core/32-core exec ratio per key.
+(scripts/gen_scale_data.py output) at two core counts — every core this
+process may run on, and one — and report the 1-core/N-core exec ratio
+per key.
 
-At sf0.1 every benched key sits at or below the local[32] per-stage
-scheduling floor, so sf0.1 numbers say nothing about parallel scaling.
+At sf0.1 every benched key sits at or below the per-stage scheduling
+floor, so sf0.1 numbers say nothing about parallel scaling.
 Each core count runs in its OWN subprocess (scripts/isolate.py) so
 `local[N]` and defaultParallelism are honest; reps are self-contained
 (persist registry released per rep) and we take min-of-reps per
@@ -51,24 +52,26 @@ def run(cpus: int, sf_dir: str, keys: list[str]) -> dict[str, float]:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/scale_sf05"
     keys = sys.argv[2:] or DEFAULT_KEYS
+    hi, lo = len(os.sched_getaffinity(0)), 1
     res = {}
-    for cpus in (32, 8):
+    for cpus in (hi, lo):
         print(f"== running {len(keys)} keys at local[{cpus}] over {sf_dir}",
               flush=True)
         res[cpus] = run(cpus, sf_dir, keys)
     rows = []
     for k in keys:
-        t32, t8 = res[32].get(k), res[8].get(k)
-        if t32 and t8:
-            rows.append((k, t32, t8, round(t8 / t32, 2)))
-    print(f"\n| key | 32-core s | 8-core s | ratio (8c/32c) |")
+        t_hi, t_lo = res[hi].get(k), res[lo].get(k)
+        if t_hi and t_lo:
+            rows.append((k, t_hi, t_lo, round(t_lo / t_hi, 2)))
+    print(f"\n| key | {hi}-core s | {lo}-core s | ratio ({lo}c/{hi}c) |")
     print("|---|---|---|---|")
     for k, a, b, r in rows:
         print(f"| {k} | {a:.2f} | {b:.2f} | {r} |")
     with open(os.path.join(ROOT, "SCALE_SPOT.json"), "w") as f:
         json.dump(
-            {"sf_dir": sf_dir, "keys": {k: {"c32": a, "c8": b, "ratio": r}
-                                        for k, a, b, r in rows}},
+            {"sf_dir": sf_dir,
+             "keys": {k: {f"c{hi}": a, f"c{lo}": b, "ratio": r}
+                      for k, a, b, r in rows}},
             f, indent=1,
         )
 

@@ -30,7 +30,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import ensure_parallelism
-from .similarity import _UNROLL_DIM
 from .text import STOPWORDS_EN, tokens
 
 #: Latin diacritics the lang_id heuristic treats as de/fr/es evidence —
@@ -182,7 +181,6 @@ def knn_classify(
     id_col: str = "vec_id",
     label_col: str = "label",
     neighbors: DataFrame | None = None,
-    unroll: "int | None" = _UNROLL_DIM,
     symmetric: bool = False,
 ) -> DataFrame:
     """k-NN majority-vote classification over an embedding column — the
@@ -217,7 +215,7 @@ def knn_classify(
         nbrs = F.broadcast(
             cosine_topk(
                 queries, corpus, k=k, vec_col=vec_col, id_col=id_col,
-                unroll=unroll, symmetric=symmetric,
+                symmetric=symmetric,
             ).select("query_id", "neighbor_id")
         )
     labels = corpus.select(
@@ -267,7 +265,6 @@ def label_noise_report(
     id_col: str = "vec_id",
     label_col: str = "label",
     neighbors: DataFrame | None = None,
-    unroll: "int | None" = _UNROLL_DIM,
 ) -> DataFrame:
     """Confident-learning-lite label-noise audit (the cheap core of
     Northcutt et al. 2021): classify EVERY labeled vector by its k
@@ -287,7 +284,7 @@ def label_noise_report(
     # scores only the id_a < id_b half and mirrors (see cosine_topk)
     res = knn_classify(
         corpus, corpus, k=k, vec_col=vec_col, id_col=id_col,
-        label_col=label_col, neighbors=neighbors, unroll=unroll,
+        label_col=label_col, neighbors=neighbors,
         symmetric=neighbors is None,
     )
     return res.groupBy(F.col("true_label").alias("label")).agg(

@@ -46,23 +46,16 @@ from . import ensure_parallelism
 from .similarity import as_double, decimal_mean_array, dot
 
 
-def sqdist6(
-    a: "Column | str", b: "Column | str", unroll: int | None = None
-) -> Column:
+def sqdist6(a: "Column | str", b: "Column | str") -> Column:
     """L2² via three dot products, each rounded to 6 decimals BEFORE the
     combine — the documented engine-crossing boundary (DuckDB's
     list_dot_product and Spark's aggregate(zip_with) may sum in different
-    orders; rounding each dot first makes the combine exact).
-
-    ``unroll`` threads the statically-known array length down to
-    :func:`similarity.dot`'s guarded codegen unroll (None keeps dot's
-    full-dim default — right for full-vector callers; subvector callers
-    pass their dsub)."""
-    kw = {} if unroll is None else {"unroll": unroll}
+    orders; rounding each dot first makes the combine exact).  Any array
+    length works: full vectors and dsub-wide subvectors alike."""
     return (
-        F.round(dot(a, a, **kw), 6)
-        - 2 * F.round(dot(a, b, **kw), 6)
-        + F.round(dot(b, b, **kw), 6)
+        F.round(dot(a, a), 6)
+        - 2 * F.round(dot(a, b), 6)
+        + F.round(dot(b, b), 6)
     )
 
 
@@ -83,7 +76,6 @@ def _assign(
     id_col: str,
     carry_sv: bool,
     carry_d: bool = False,
-    unroll: int | None = None,
 ) -> DataFrame:
     """Argmin-L2 code per (id, subspace): broadcast join on subspace, then
     min(struct(rounded dist, code)) — the map-side-combine shape from
@@ -95,7 +87,7 @@ def _assign(
         "subspace",
         "sv",
         "code",
-        F.round(sqdist6("sv", "centroid", unroll=unroll), 6).alias("d"),
+        F.round(sqdist6("sv", "centroid"), 6).alias("d"),
     )
     aggs = [F.min(F.struct("d", "code")).alias("_m")]
     if carry_sv:
@@ -136,7 +128,7 @@ def pq_train(
         "subspace", F.col("vid").alias("code"), F.col("sv").alias("centroid")
     )
     for _ in range(iters):
-        assigned = _assign(sub, codebooks, "vid", carry_sv=True, unroll=dsub)
+        assigned = _assign(sub, codebooks, "vid", carry_sv=True)
         codebooks = (
             assigned.groupBy("subspace", "code")
             .agg(decimal_mean_array("sv", dsub).alias("centroid"))
@@ -160,7 +152,7 @@ def pq_encode(
         F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("v")
     )
     return _assign(
-        subvectors(vecs, m, dsub), codebooks, "vid", carry_sv=False, unroll=dsub
+        subvectors(vecs, m, dsub), codebooks, "vid", carry_sv=False
     )
 
 
@@ -190,7 +182,7 @@ def pq_adc_topk(
         "query_id",
         "subspace",
         "code",
-        F.round(sqdist6("sv", "centroid", unroll=dsub), 6).alias("pd"),
+        F.round(sqdist6("sv", "centroid"), 6).alias("pd"),
     )
     scored = (
         codes.join(F.broadcast(dtable), ["subspace", "code"])
@@ -254,7 +246,7 @@ def ivfpq_topk(
         "query_id",
         "subspace",
         "code",
-        F.round(sqdist6("sv", "centroid", unroll=dsub), 6).alias("pd"),
+        F.round(sqdist6("sv", "centroid"), 6).alias("pd"),
     )
     tagged = codes.join(cells, "vid")
     cands = tagged.join(F.broadcast(probes), "cell")
@@ -436,7 +428,6 @@ def pq_quant_error(
         "vid",
         carry_sv=False,
         carry_d=True,
-        unroll=dsub,
     )
     return assigned.groupBy(F.col("subspace").cast("int").alias("subspace")).agg(
         F.count("*").cast("long").alias("n"),
@@ -646,7 +637,7 @@ def ivfpq_query(
         "query_id",
         "subspace",
         "code",
-        F.round(sqdist6("sv", "centroid", unroll=dsub), 6).alias("pd"),
+        F.round(sqdist6("sv", "centroid"), 6).alias("pd"),
     )
     cands = codes.join(F.broadcast(probes), "cell")
     scored = (

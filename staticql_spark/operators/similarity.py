@@ -3,8 +3,9 @@
 - ``cosine_topk``: brute-force exact top-k — the correctness baseline. The
   query side is expected to be small (it is broadcast); the corpus streams
   through one narrow projection, dot products run as built-in higher-order
-  functions (zip_with + aggregate) inside codegen, and top-k per query is a
-  window rank — no driver collect anywhere.
+  functions (zip_with + aggregate; CodegenFallback, so they evaluate
+  interpreted), and top-k per query is a window rank — no driver collect
+  anywhere.
 - ``lsh_topk``: the scale path — sign-of-hyperplane LSH buckets via
   deterministic md5-derived planes; only colliding buckets join. Recall is
   tunable with ``num_planes`` (fewer planes = bigger buckets = higher
@@ -63,31 +64,10 @@ def centroid_sample(
     )
 
 
-# Higher-order functions (ZipWith / ArrayAggregate) are CodegenFallback in
-# Spark: every per-pair dot product under a cross join runs on the
-# interpreted expression path.  When the array length is statically known
-# (this repo's embedding tables are dim-64 end to end) the same
-# left-associative sum unrolls into plain GetArrayItem/multiply/add
-# expressions, which whole-stage codegen compiles — measured 4-10x on the
-# N^2 pair kernels (guide 4.1: prefer built-in expressions inside codegen).
-# The unrolled form is BIT-IDENTICAL to the fold: ((0.0 + a0*b0) + a1*b1)
-# + ... in the same order, null propagating through any null element or
-# short array exactly like zip_with padding.  A runtime size guard keeps
-# the fold as the fallback for every other length, so values never change.
-#
-# The unrolled tree is built as ONE F.expr SQL string, not a Python loop
-# of Column operators: building 64 getItem/multiply/add Columns costs
-# ~900 ms of py4j round trips PER CALL SITE (measured — it inflated
-# ann_kendall_tau's construct 0.6 -> 5.4 s), while the string parses
-# JVM-side in ~1 ms and analyzes in the same tree.  That is why the
-# unroll path takes column NAMES (str): a name renders into SQL text
-# directly.  Column-typed inputs keep the portable fold.
-_UNROLL_DIM = 64
-
-# Rendered-unroll Column cache (r14, r13 verdict #3 construct mass): the
-# 64-term SQL strings parse JVM-side per F.expr call (~1-18 ms each); the
-# same (col-names, dim) sites recur on every construct of every bench rep,
-# so the parsed UNRESOLVED Column is memoized per SQL text.  An unresolved
+# Parsed-expression cache for :func:`decimal_mean_array`: its dim-term
+# SQL string parses JVM-side per F.expr call (~1-18 ms each); the same
+# (col-name, dim) sites recur on every construct of every bench rep, so
+# the parsed UNRESOLVED Column is memoized per SQL text.  An unresolved
 # expression holds no data and no session/plan state — attribute
 # references resolve against whatever DataFrame it is applied to — so
 # reuse across constructs/sessions in one process is safe.  The key space
@@ -103,43 +83,6 @@ def _cached_expr(sql: str) -> Column:
     return col
 
 
-# Measured break-even for the unrolled pair kernel (r13/r14, 64-dim
-# embeddings, local[32]): below ~1M scored pairs the one-time whole-stage-
-# codegen compile of the wide unrolled projection plus its plan mass cost
-# more than the per-pair interpreted-fold overhead they remove — the r13
-# driver bench measured ann_cosine_topk (80k pairs) 0.40->0.61 s and
-# ann_knn_classify (190k pairs) 0.61->0.87 s under the unroll, while
-# ann_label_noise (4M pairs) improved 7.2->4.3 s cold.  Callers that know
-# their pair count gate the unroll on it; the threshold is a one-order-of-
-# magnitude decision, so a rough row estimate is enough.
-UNROLL_PAIR_BREAK_EVEN = 1_000_000
-
-
-def estimated_rows(df: DataFrame, row_bytes: int) -> int:
-    """Catalyst-statistics row-count estimate: sizeInBytes / row_bytes.
-
-    No job runs — sizeInBytes for a file source is the on-disk byte count
-    from the (already listed) file index.  ``row_bytes`` is the caller's
-    width estimate; for this repo's embedding tables the 8 x dim vector
-    payload dominates and random doubles do not compress, so 8 * dim is
-    within ~25% of truth (measured: 512 est vs ~400 actual at sf0.1).
-    Returns 0 when statistics are unavailable (callers treat 0 as
-    below-break-even, i.e. the portable fold)."""
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return 0
-    return max(size // max(row_bytes, 1), 0)
-
-
-def unroll_for_pairs(est_pairs: float, dim: int = _UNROLL_DIM) -> int | None:
-    """Unroll width for a pair kernel expected to score ``est_pairs``
-    pairs: ``dim`` above the measured break-even, None (fold) below.
-    Values are unchanged either way — the unroll is bit-identical to the
-    fold — this gates only the physical form."""
-    return dim if est_pairs >= UNROLL_PAIR_BREAK_EVEN else None
-
-
 def _sql_ref(c: "Column | str") -> str | None:
     """Backtick-quoted SQL reference for a column NAME; None for Columns."""
     if isinstance(c, str):
@@ -151,49 +94,18 @@ def _as_col(c: "Column | str") -> Column:
     return F.col(c) if isinstance(c, str) else c
 
 
-def _dot_sql(asql: str, bsql: str, d: int, zero: str) -> str:
-    terms = " + ".join(f"{asql}[{i}] * {bsql}[{i}]" for i in range(d))
-    fold = (
-        f"aggregate(zip_with({asql}, {bsql}, (x, y) -> x * y), "
-        f"{zero}, (acc, x) -> acc + x)"
-    )
-    return (
-        f"CASE WHEN size({asql}) = {d} AND size({bsql}) = {d} "
-        f"THEN {zero} + {terms} ELSE {fold} END"
-    )
-
-
-def dot(
-    a: "Column | str", b: "Column | str", unroll: int | None = _UNROLL_DIM
-) -> Column:
-    """Sequential-order double dot product (portable across engines).
-
-    Pass column NAMES to get the guarded codegen unroll (see module
-    note); Column expressions always take the higher-order fold."""
-    asql, bsql = _sql_ref(a), _sql_ref(b)
-    if unroll and asql and bsql:
-        return _cached_expr(_dot_sql(asql, bsql, unroll, "cast(0.0 as double)"))
-    a, b = _as_col(a), _as_col(b)
+def dot(a: "Column | str", b: "Column | str") -> Column:
+    """Sequential-order double dot product (portable across engines):
+    ((0.0 + a0*b0) + a1*b1) + ..., the higher-order fold."""
     return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
+        F.zip_with(_as_col(a), _as_col(b), lambda x, y: x * y),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
 
 
-def norm(a: "Column | str", unroll: int | None = _UNROLL_DIM) -> Column:
-    asql = _sql_ref(a)
-    if unroll and asql:
-        terms = " + ".join(f"{asql}[{i}] * {asql}[{i}]" for i in range(unroll))
-        fold = f"aggregate({asql}, cast(0.0 as double), (acc, x) -> acc + x * x)"
-        return F.sqrt(
-            _cached_expr(
-                f"CASE WHEN size({asql}) = {unroll} "
-                f"THEN cast(0.0 as double) + {terms} ELSE {fold} END"
-            )
-        )
-    a = _as_col(a)
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
+def norm(a: "Column | str") -> Column:
+    return F.sqrt(F.aggregate(_as_col(a), F.lit(0.0), lambda acc, x: acc + x * x))
 
 
 def cosine(a: "Column | str", b: "Column | str") -> Column:
@@ -218,9 +130,8 @@ def decimal_mean_array(vec: "Column | str", dim: int) -> Column:
 
     Built as ONE F.expr parse when the vector is passed by NAME — the
     Python loop of per-element Column operators cost ~6 py4j round trips
-    per dimension per call site (the dot/norm unroll lesson, guide §1.2
-    "per-task work" applied to the driver); the SQL string builds the
-    identical tree JVM-side.
+    per dimension per call site (guide §1.2 "per-task work" applied to
+    the driver); the SQL string builds the identical tree JVM-side.
     """
     vsql = _sql_ref(vec)
     if vsql:
@@ -244,7 +155,6 @@ def cosine_with_norms(
     b: "Column | str",
     an: Column,
     bn: Column,
-    unroll: int | None = _UNROLL_DIM,
 ) -> Column:
     """Cosine from a precomputed norm per side.
 
@@ -252,9 +162,8 @@ def cosine_with_norms(
     (dot + 2 norms) to one: norms are bound as columns ONCE per row before
     the pairing join, never recomputed per pair. Numerically identical to
     :func:`cosine` (same summation order), so oracle values are unchanged.
-    Pass the vectors by NAME to get :func:`dot`'s codegen unroll.
     """
-    return dot(a, b, unroll=unroll) / (an * bn)
+    return dot(a, b) / (an * bn)
 
 
 def cosine_topk(
@@ -263,32 +172,30 @@ def cosine_topk(
     k: int = 10,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    unroll: int | None = _UNROLL_DIM,
     symmetric: bool = False,
 ) -> DataFrame:
     """Exact top-k neighbors per query: (query_id, neighbor_id, cosine, rank).
 
     Ties break on neighbor id; cosine is rounded to 6 places BEFORE ranking
     so the ordering is reproducible across engines' float summation.
-    Self-matches (same id) are excluded.  ``unroll`` threads the statically
-    known vector length to :func:`dot`'s guarded codegen unroll (callers on
-    truncated vectors — the MRL prefix passes — pass their d).
+    Self-matches (same id) are excluded.  Norms are computed once per row
+    before the cross join; each pair then runs one :func:`dot` fold.
 
     ``symmetric=True`` is a caller-asserted contract that ``queries`` IS
     ``corpus`` (same rows, same filters — the corpus-as-queries audits:
     label-noise, reciprocal kNN).  Cosine is symmetric, so the kernel then
     scores only the id_a < id_b half of the cross join and mirrors each
     row map-side — HALF the dominant per-pair work.  Bit-identical: the
-    unrolled/fold sum runs the same k-order either direction (IEEE
-    multiplication commutes term-by-term) and qn*cn commutes, so the
-    mirrored cosine equals the one the full join would compute.
+    fold runs the same k-order either direction (IEEE multiplication
+    commutes term-by-term) and qn*cn commutes, so the mirrored cosine
+    equals the one the full join would compute.
     """
     q = queries.select(
         F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-    ).withColumn("qn", norm("qv", unroll=unroll))
+    ).withColumn("qn", norm("qv"))
     c = ensure_parallelism(corpus).select(
         F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cv")
-    ).withColumn("cn", norm("cv", unroll=unroll))
+    ).withColumn("cn", norm("cv"))
     pair_filter = (
         (F.col("query_id") < F.col("neighbor_id"))
         if symmetric
@@ -300,7 +207,7 @@ def cosine_topk(
         "neighbor_id",
         F.round(
             cosine_with_norms(
-                F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn"), unroll=unroll
+                F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")
             ),
             6,
         ).alias("cosine"),
@@ -340,16 +247,7 @@ def _plane(dim: int, plane_idx: int) -> list[float]:
 
 
 def lsh_bucket(vec: "Column | str", dim: int, num_planes: int = 8) -> Column:
-    """Sign-pattern bucket id (string of 0/1) for a vector column.
-
-    Deliberately NOT unrolled (the dot/norm treatment was measured and
-    REVERTED here): num_planes x dim terms in one projection blow past
-    the JIT's huge-method limit, so the generated code runs as
-    interpreted bytecode — 2x SLOWER steady-state than the fold on this
-    per-row (linear, not N^2) kernel, plus ~3 s of Janino compile on
-    first use (micro-probe: unroll 0.40 s steady / 3.2 s first vs fold
-    0.18 s steady on 2000 rows).  The fold stays.
-    """
+    """Sign-pattern bucket id (string of 0/1) for a vector column."""
     vec = _as_col(vec)
     bits = []
     for p in range(num_planes):
@@ -497,10 +395,6 @@ def ivf_topk(
     )
     if centroids is None:
         centroids = centroid_sample(corpus, vec_col, id_col, centroid_stride)
-    # fold, not unroll: the IVF candidate set is nprobe/num_cells of the
-    # corpus by design — far below the ~1M-pair break-even where the
-    # unrolled kernel's compile + plan mass pays for itself (measured on
-    # ann_hybrid_rrf: unroll made this path 2-5x slower; see lsh_bucket)
     cells = ivf_assign(
         c, centroids, vec_alias="cv", id_alias="neighbor_id", nprobe=1
     ).withColumn("cn", norm(F.col("cv")))
@@ -614,7 +508,7 @@ def ivf_query(
     probes = ivf_assign(
         F.broadcast(q), centroids, vec_alias="qv", id_alias="query_id", nprobe=nprobe
     )
-    probes = probes.withColumn("qn", norm(F.col("qv")))  # fold: probe-sized
+    probes = probes.withColumn("qn", norm(F.col("qv")))
     probe_cells = sorted({r["cell"] for r in probes.select("cell").distinct().collect()})
     index = (
         spark.read.parquet(path)
@@ -671,8 +565,6 @@ def lsh_topk(
     pairs = F.broadcast(q).join(c, "bucket").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
-    # fold, not unroll: bucket-restricted candidates are a small fraction
-    # of corpus^2 (the point of LSH) — below the unroll break-even
     scored = pairs.select(
         "query_id",
         "neighbor_id",
@@ -772,15 +664,7 @@ def _with_int8_codes(df: DataFrame, vec_col: str, id_out: Column, code_col: str)
     )
 
 
-def _int_dot(
-    a: "Column | str", b: "Column | str", unroll: int | None = _UNROLL_DIM
-) -> Column:
-    # Integer sums are order-independent, so the unrolled codegen form
-    # (same guard + F.expr discipline as :func:`dot`) is exactly equal by
-    # algebra, not just by matching the fold's order.
-    asql, bsql = _sql_ref(a), _sql_ref(b)
-    if unroll and asql and bsql:
-        return _cached_expr(_dot_sql(asql, bsql, unroll, "cast(0 as bigint)"))
+def _int_dot(a: "Column | str", b: "Column | str") -> Column:
     return F.aggregate(
         F.zip_with(_as_col(a), _as_col(b), lambda x, y: x * y),
         F.lit(0).cast("long"),
@@ -1457,9 +1341,9 @@ def mrl_recall(
     for d in sorted(int(d) for d in dims):
         qd = queries.select(id_col, F.slice(vec_col, 1, d).alias(vec_col))
         cd = emb.select(id_col, F.slice(vec_col, 1, d).alias(vec_col))
-        trunc = cosine_topk(
-            qd, cd, k=k, vec_col=vec_col, id_col=id_col, unroll=d
-        ).select("query_id", "neighbor_id")
+        trunc = cosine_topk(qd, cd, k=k, vec_col=vec_col, id_col=id_col).select(
+            "query_id", "neighbor_id"
+        )
         hits = trunc.join(exact, ["query_id", "neighbor_id"], "left_semi")
         row = (
             exact.agg(F.count("*").cast("long").alias("n_exact_pairs"))

@@ -89,50 +89,6 @@ def test_cosine_topk_self_similarity(spark, emb):
     assert all(-1.0 <= c <= 1.0 for c in cosines)
 
 
-@pytest.mark.slow  # soak-grade: excluded from the default gate (pytest.ini)
-def test_unrolled_dot_bit_identical_to_fold(spark):
-    # The codegen unroll in dot/norm/_int_dot must be BIT-identical to the
-    # HOF fold on every input shape: full 64-dim, the dsub=16 subvector
-    # path, short arrays (guard falls back to the fold), null elements,
-    # and null arrays.  eqNullSafe catches any value or nullness drift.
-    import hashlib
-
-    def vec(seed, d=64):
-        return [
-            (int(hashlib.md5(f"{seed}|{i}".encode()).hexdigest()[:8], 16)
-             / float(0xFFFFFFFF) * 2.0 - 1.0)
-            for i in range(d)
-        ]
-
-    rows = [(vec(s),) for s in range(20)]
-    rows += [(vec("short", 17),), ([None] + vec("n", 63),), (None,)]
-    df = spark.createDataFrame(rows, "va array<double>")
-    pairs = df.crossJoin(df.select(F.col("va").alias("vb")))
-    # name-typed args take the F.expr unroll; Column-typed args are the
-    # reference fold (dot falls back to the fold for Column inputs)
-    a, b = F.col("va"), F.col("vb")
-    for d in (64, 16):
-        bad = pairs.select(
-            similarity.dot("va", "vb", unroll=d).alias("u"),
-            similarity.dot(a, b, unroll=None).alias("f"),
-            similarity.norm("va", unroll=d).alias("nu"),
-            similarity.norm(a, unroll=None).alias("nf"),
-        ).where(
-            (~F.col("u").eqNullSafe(F.col("f")))
-            | (~F.col("nu").eqNullSafe(F.col("nf")))
-        ).count()
-        assert bad == 0, f"unroll={d} diverged from the fold"
-    coded = pairs.select(
-        similarity._int8_codes(a).alias("ca"),
-        similarity._int8_codes(b).alias("cb"),
-    )
-    bad = coded.select(
-        similarity._int_dot("ca", "cb", unroll=64).alias("u"),
-        similarity._int_dot(F.col("ca"), F.col("cb"), unroll=None).alias("f"),
-    ).where(~F.col("u").eqNullSafe(F.col("f"))).count()
-    assert bad == 0
-
-
 def test_lsh_topk_subset_of_bruteforce_scores(spark, emb):
     queries = emb.filter(F.col("vec_id") == 0)
     exact = {
@@ -4239,17 +4195,13 @@ def test_expand_pairs_chunked_property(spark):
     inner()
 
 
-def test_unroll_guard_paths_bit_identical_fast(spark):
-    # Fast sibling of test_unrolled_dot_bit_identical_to_fold (slow, 4M
-    # pairs): runs in the default gate.  Covers the r13 ADVICE gaps:
-    # (a) rows of EXACTLY 16 elements, so the dsub=16 THEN branch really
-    #     fires (the slow test's fixture has sizes 64/17/63, so its
-    #     unroll=16 loop compared fold vs fold);
-    # (b) decimal_mean_array by NAME (one-parse F.expr) vs by Column
+def test_decimal_mean_array_and_staged_int8_codes_bit_identical(spark):
+    # Two alternate physical forms that must equal their reference form:
+    # (a) decimal_mean_array by NAME (one-parse F.expr) vs by Column
     #     (portable form) inside the same groupBy;
-    # (c) the staged int8 code path (_with_int8_codes, r14) vs the
-    #     composed _int8_codes expression;
-    # plus short/null-element/null-array guard rows for all three.
+    # (b) the staged int8 code path (_with_int8_codes) vs the composed
+    #     _int8_codes expression;
+    # plus short/null-element/null-array rows for both.
     import hashlib
 
     def vec(seed, d):
@@ -4266,18 +4218,6 @@ def test_unroll_guard_paths_bit_identical_fast(spark):
         (14, 2, vec("short", 7)),
     ]
     df = spark.createDataFrame(rows, "rid long, g int, va array<double>")
-
-    pairs = df.crossJoin(df.select(F.col("va").alias("vb")))
-    bad = pairs.select(
-        similarity.dot("va", "vb", unroll=16).alias("u"),
-        similarity.dot(F.col("va"), F.col("vb"), unroll=None).alias("f"),
-        similarity.norm("va", unroll=16).alias("nu"),
-        similarity.norm(F.col("va"), unroll=None).alias("nf"),
-    ).where(
-        (~F.col("u").eqNullSafe(F.col("f")))
-        | (~F.col("nu").eqNullSafe(F.col("nf")))
-    ).count()
-    assert bad == 0, "16-wide unroll diverged from the fold"
 
     # decimal_mean_array contracts fixed-width input (both its forms index
     # [0..d-1] unconditionally — ANSI throws on the short row); null

@@ -6,6 +6,9 @@ registry sweep stays manual: ``python tests/oracle_harness.py``.
 The sample is chosen by rule, not by hand:
 - the operator keys of the benchmark's ``operator_batch`` workload;
 - the keys built on the shared IVF-vs-exact pairing (``RANKING_KEYS``);
+- keys whose dot/norm form this change flips (``VECTOR_KERNEL_KEYS``):
+  the keys whose plans carried an array-length-guarded per-element SQL
+  sum before ``dot``/``norm``/``_int_dot`` became the fold alone;
 - the first registry key of every prefix family with at least 5 keys
   (``ann``'s is already an operator key);
 - the staticql-surface keys ``where_eq``, ``has_many_agg``, ``cursor_after``.
@@ -25,6 +28,12 @@ OPERATOR_KEYS = [
 ]
 # keys built on the shared IVF-vs-exact pairing
 RANKING_KEYS = ["ann_recall", "ann_rbo", "ann_mrr", "ann_ndcg", "ann_kendall_tau"]
+# keys whose dot/norm form this change flips
+VECTOR_KERNEL_KEYS = [
+    "ann_label_noise", "ann_rnn_pairs", "embedding_mrl_recall",
+    "dedup_semantic_incr", "embedding_neardup", "ann_semantic_decon",
+    "ann_quantized", "ann_pq_quant_error", "embedding_top_pc",
+]
 SURFACE_KEYS = ["where_eq", "has_many_agg", "cursor_after"]
 
 
@@ -36,7 +45,10 @@ def _family_heads() -> list[str]:
 
 
 KEYS = list(
-    dict.fromkeys(OPERATOR_KEYS + RANKING_KEYS + _family_heads() + SURFACE_KEYS)
+    dict.fromkeys(
+        OPERATOR_KEYS + RANKING_KEYS + VECTOR_KERNEL_KEYS + _family_heads()
+        + SURFACE_KEYS
+    )
 )
 
 

@@ -931,3 +931,25 @@ def test_verify_jaccard_builds_on_shingle_side(spark):
     assert p.count("ShuffledHashJoin Inner BuildRight") == 2, p
     assert "SortMergeJoin" not in p, p
     assert "BroadcastHashJoin" not in p, p
+
+
+@pytest.mark.parametrize(
+    "key",
+    [
+        "ann_label_noise", "ann_rnn_pairs", "embedding_mrl_recall",
+        "dedup_semantic_incr", "embedding_neardup", "ann_semantic_decon",
+        "ann_quantized", "ann_pq_quant_error", "embedding_top_pc",
+    ],
+)
+def test_vector_kernels_are_the_fold(spark, key):
+    # dot/norm/_int_dot have one physical form, the zip_with/aggregate
+    # fold: no array-length CASE guard selecting a per-element SQL sum
+    # may reach the optimized plan of any pairwise or per-row vector key
+    from staticql_spark.operators import release_persists
+
+    try:
+        df = entrymod.queries()[key](spark, SF_SMOKE)
+        p = df._jdf.queryExecution().optimizedPlan().toString()
+    finally:
+        release_persists()
+    assert "CASE WHEN (size(" not in p, p
