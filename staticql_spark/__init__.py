@@ -43,6 +43,15 @@ class StaticQL:
 
     Parity: defineStaticQL(config)({repository, options}) — src/index.ts
     :13-55 / src/StaticQL.ts:64-87.
+
+    An instance reads a snapshot of its sources.  The first action over a
+    parsed source (content files or the HTTP backend) lists, parses and
+    types it once, and every later read, join, ``sql()`` view and index
+    build of the instance scans those rows.  Content edited afterwards is
+    not seen: ``define()`` again (or ``fresh()``) to read it.  The snapshot
+    is a local checkpoint, freed with the instance's frames.  ``type:
+    parquet`` sources and caller-supplied ``dataframes`` are columnar
+    already and are used as given.
     """
 
     def __init__(
@@ -63,7 +72,8 @@ class StaticQL:
         # an http(s):// base_dir selects the CDN backend; prefer_gzip is its
         # ".gz first" content-fetch option (reference options.preferGzip)
         self.prefer_gzip = prefer_gzip
-        self._dfs: dict[str, DataFrame] = dict(dataframes or {})
+        self._supplied = dict(dataframes or {})
+        self._dfs: dict[str, DataFrame] = dict(self._supplied)
 
     def df(self, name: str) -> DataFrame:
         if name not in self.configs:
@@ -73,13 +83,28 @@ class StaticQL:
             # per-source storage routing (MultiRepository.ts:47-80): a source
             # with its own baseDir reads from that repository; others share
             # the session base_dir.
-            self._dfs[name] = read_source(
-                self.spark,
-                cfg,
-                cfg.base_dir if cfg.base_dir is not None else self.base_dir,
-                prefer_gzip=self.prefer_gzip,
-            )
+            base_dir = cfg.base_dir if cfg.base_dir is not None else self.base_dir
+            df = read_source(self.spark, cfg, base_dir, prefer_gzip=self.prefer_gzip)
+            if cfg.type != "parquet" or base_dir.startswith(("http://", "https://")):
+                # Parsed sources become a snapshot: the first action parses
+                # and types them once, later reads scan the kept rows.
+                # Parquet stays a plain scan so filters still push down.
+                df = df.localCheckpoint(eager=False)
+            self._dfs[name] = df
         return self._dfs[name]
+
+    def fresh(self) -> "StaticQL":
+        """A new instance over the same sources, whose snapshot is taken
+        from the content as it is now."""
+        return StaticQL(
+            self.configs,
+            base_dir=self.base_dir,
+            spark=self.spark,
+            strict_index=self.strict_index,
+            dataframes=self._supplied,
+            indexers=self.indexers,
+            prefer_gzip=self.prefer_gzip,
+        )
 
     def register_views(self) -> None:
         for name in self.configs:

@@ -16,6 +16,13 @@ hand-built index machinery did: predicate pushdown (≈ prefix pruning),
 column pruning (≈ covering index), broadcast semi-joins (≈ index-assisted
 foreign loads), limit pushdown (≈ early-terminated shard walks).
 
+The builder reads the source frames of its ``StaticQL``, and each parsed
+source there is a snapshot: its content files are parsed and typed by the
+first action, and every later query of that instance scans the kept rows
+(a ``Scan ExistingRDD`` in the plan, no Python parse).  Edits made after
+that are seen by a new ``define()``; the rows are freed with the
+instance's frames.
+
 Filters on fields without a declared index raise NeedsIndexError for parity
 (QueryBuilder.ts:332-352); pass ``strict_index=False`` to define() to lift
 the restriction (Spark can filter any column).

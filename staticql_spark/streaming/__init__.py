@@ -616,10 +616,13 @@ def stream_diff_refresh(
     )
 
     def apply_batch(batch_df: DataFrame, _batch_id: int) -> None:
+        # A StaticQL reads a snapshot of its sources, so each micro-batch
+        # indexes the content as it is when the batch runs.
+        sql = staticql.fresh()
         sources = [r["source"] for r in batch_df.select("source").distinct().collect()]
         for source in sorted(sources):
             refresh_index_partitions(
-                staticql, source, batch_df.filter(F.col("source") == source), out_dir
+                sql, source, batch_df.filter(F.col("source") == source), out_dir
             )
 
     writer = (

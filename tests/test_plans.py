@@ -25,6 +25,18 @@ def plan(df) -> str:
     )
 
 
+def test_second_content_read_scans_the_snapshot(herbal):
+    # A StaticQL parses each content source once: after one read, the next
+    # read of the instance scans the kept rows, with no Python parse left.
+    herbal.from_("herbs").where("tagSlugs", "eq", "memory").exec()
+    df = herbal.from_("herbs").where("tagSlugs", "eq", "memory").plan()
+    assert [r["slug"] for r in df.collect()] == ["centella-asiatica"]
+    p = df._jdf.queryExecution().executedPlan().toString()
+    for node in ("MapInPandas", "PythonMapInArrow", "BatchEvalPython"):
+        assert node not in p, p
+    assert "Scan ExistingRDD" in p, p
+
+
 def test_filter_pushdown_eq(spark):
     p = plan(entrymod.q_where_eq(spark, SF_SMOKE))
     assert re.search(r"PushedFilters:.*EqualTo\(c_mktsegment,BUILDING\)", p), p

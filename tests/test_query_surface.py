@@ -6,6 +6,8 @@ SURVEY §5.2) — the six canonical queries plus ingestion shape checks.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from staticql_spark import NeedsIndexError
@@ -234,6 +236,72 @@ def test_slug_mismatch_is_load_error(spark, tmp_path):
     sql = define(cfg)(base_dir=str(tmp_path), spark=spark)
     with pytest.raises(Exception, match="slug mismatch"):
         sql.df("herbs").collect()
+
+
+def test_instance_reads_a_snapshot_of_its_content(spark, content_dir, tmp_path):
+    # An instance parses its sources once; an edit made after its first
+    # read is seen by a new define(), not by the same instance.
+    import shutil
+
+    from staticql_spark import define
+    from tests.conftest import CONFIG
+
+    shutil.copytree(content_dir, tmp_path, dirs_exist_ok=True)
+    sql = define(CONFIG)(base_dir=str(tmp_path), spark=spark)
+    assert sql.from_("herbs").find("arctium-lappa")["name"] == "ゴボウ"
+
+    p = tmp_path / "content" / "herbs" / "arctium-lappa.md"
+    p.write_text(p.read_text().replace("name: ゴボウ", "name: 牛蒡"), encoding="utf-8")
+    assert sql.from_("herbs").find("arctium-lappa")["name"] == "ゴボウ"
+    assert sql.fresh().from_("herbs").find("arctium-lappa")["name"] == "牛蒡"
+    again = define(CONFIG)(base_dir=str(tmp_path), spark=spark)
+    assert again.from_("herbs").find("arctium-lappa")["name"] == "牛蒡"
+
+
+def test_failed_first_read_is_not_kept(spark, tmp_path):
+    # A source whose first read fails validation fails again on the next
+    # read of the same instance: no partial snapshot stands in for it.
+    from staticql_spark import define
+
+    d = tmp_path / "content" / "herbs"
+    d.mkdir(parents=True)
+    (d / "ok.md").write_text("---\nname: x\n---\n", encoding="utf-8")
+    (d / "bad.md").write_text("---\noverview: o\n---\n", encoding="utf-8")
+    cfg = {
+        "sources": {
+            "herbs": {
+                "pattern": "content/herbs/*.md",
+                "type": "markdown",
+                "schema": {
+                    "type": "object",
+                    "properties": {"name": {"type": "string"}},
+                    "required": ["name"],
+                },
+                "index": ["name"],
+            }
+        }
+    }
+    sql = define(cfg)(base_dir=str(tmp_path), spark=spark)
+    for _ in range(2):
+        with pytest.raises(Exception, match="required field 'name' is null for slug=bad"):
+            sql.from_("herbs").where("name", "eq", "x").exec()
+
+
+def test_parquet_source_keeps_pushed_filters(spark, tmp_path):
+    # type: parquet sources are columnar already and are not snapshotted,
+    # so a where() still reaches the parquet reader as a pushed filter.
+    from staticql_spark import define
+
+    spark.createDataFrame(
+        [("a", "x"), ("b", "y")], "slug string, name string"
+    ).write.parquet(str(tmp_path / "items"))
+    cfg = {"sources": {"items": {"pattern": "items", "type": "parquet", "index": ["name"]}}}
+    sql = define(cfg)(base_dir=str(tmp_path), spark=spark)
+    df = sql.from_("items").where("name", "eq", "x").plan()
+    assert [r["slug"] for r in df.collect()] == ["a"]
+    p = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    assert "Scan parquet" in p and "ExistingRDD" not in p, p
+    assert re.search(r"PushedFilters: \[.*EqualTo\(name,x\)", p), p
 
 
 def test_type_mismatch_is_descriptive_load_error(spark, tmp_path):

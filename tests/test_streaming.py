@@ -144,6 +144,64 @@ def test_stream_diff_refresh_updates_index(spark, content_dir, tmp_path):
     assert "ゴツゴラ" in after
 
 
+def _two_refresh_runs(spark, content_dir, tmp_path, change):
+    """One StaticQL drives two availableNow refresh runs sharing one
+    checkpoint; ``change(herbs_dir)`` edits the content between them and
+    returns the second run's DiffEntry.  Returns the indexed herb names
+    after each run."""
+    import shutil
+
+    from staticql_spark import define
+    from staticql_spark.streaming import DIFF_SCHEMA, stream_diff_refresh
+    from tests.conftest import CONFIG
+
+    root = tmp_path / "content"
+    shutil.copytree(content_dir, root)
+    out = str(tmp_path / "idx")
+    diff_dir = str(tmp_path / "diffs")
+    ckpt = str(tmp_path / "ckpt")
+    sql = define(CONFIG)(base_dir=str(root), spark=spark)
+    sql.save_indexes(out)
+
+    def names():
+        idx = spark.read.parquet(f"{out}/herbs").filter("field = 'name'")
+        return {r["v"] for r in idx.collect()}
+
+    def run(diff):
+        spark.createDataFrame([diff], DIFF_SCHEMA).write.mode("append").parquet(diff_dir)
+        stream_diff_refresh(sql, diff_dir, out, ckpt).awaitTermination(180)
+        return names()
+
+    p = root / "content" / "herbs" / "arctium-lappa.md"
+    p.write_text(p.read_text().replace("name: ゴボウ", "name: 牛蒡"), encoding="utf-8")
+    first = run(("M", "herbs", "arctium-lappa"))
+    return first, run(change(root / "content" / "herbs"))
+
+
+def test_stream_refresh_sees_a_file_added_between_runs(spark, content_dir, tmp_path):
+    def add(herbs):
+        (herbs / "zingiber-officinale.md").write_text(
+            "---\nname: ショウガ\ntagSlugs:\n  - warming\noverview: ショウガの概要\n---\n",
+            encoding="utf-8",
+        )
+        return ("A", "herbs", "zingiber-officinale")
+
+    first, second = _two_refresh_runs(spark, content_dir, tmp_path, add)
+    assert "牛蒡" in first and "ショウガ" not in first
+    assert {"牛蒡", "ショウガ", "ゴツゴラ"} <= second
+
+
+def test_stream_refresh_sees_an_edit_between_runs(spark, content_dir, tmp_path):
+    def edit(herbs):
+        p = herbs / "centella-asiatica.md"
+        p.write_text(p.read_text().replace("name: ゴツゴラ", "name: ツボクサ"), encoding="utf-8")
+        return ("M", "herbs", "centella-asiatica")
+
+    first, second = _two_refresh_runs(spark, content_dir, tmp_path, edit)
+    assert "ゴツゴラ" in first
+    assert "ツボクサ" in second and "ゴツゴラ" not in second and "牛蒡" in second
+
+
 @pytest.mark.slow  # soak-grade: excluded from the default gate (pytest.ini)
 def test_watermark_drops_late_events(spark, tmp_path):
     """Late-data bound: an event older than the watermark must NOT reopen
