@@ -31,7 +31,7 @@ from collections.abc import Callable
 
 from .config import SourceConfig
 from .functions import glob_base_and_regex, path_to_slug
-from .sources.parsers import parse_by_type
+from .sources.parsers import get_parser
 
 
 class GitCliProvider:
@@ -161,7 +161,7 @@ def _match_source(path: str, configs: dict[str, SourceConfig]) -> tuple[str, str
 def _records_by_slug(cfg: SourceConfig, rel_path: str, raw: str | None) -> dict[str, dict]:
     if raw is None:
         return {}
-    parsed = parse_by_type(cfg.type, raw)
+    parsed = get_parser(cfg.type)(raw)
     if isinstance(parsed, list):
         return {str(r["slug"]): r for r in parsed if r.get("slug") is not None}
     return {path_to_slug(rel_path): parsed}

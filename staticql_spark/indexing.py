@@ -19,7 +19,7 @@ the trie descent; min/max stats on v give in-shard early termination.
 Spark does NOT need this structure to answer queries (Parquet pushdown
 covers it — SURVEY §4); it exists for artifact parity (`peek`-style
 index-only workloads, the golden-file test shape) and as the target of the
-incremental maintenance path (incremental.py).
+incremental maintenance path (`streaming.refresh_index_partitions`).
 """
 
 from __future__ import annotations

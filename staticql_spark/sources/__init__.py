@@ -1,5 +1,5 @@
 """Content parsers and distributed readers."""
-from .parsers import get_parser, parse_by_type, register_parser
-from .reader import compact_to_parquet, read_source
+from .parsers import get_parser, register_parser
+from .reader import compact_to_parquet, read_source, stream_source
 
-__all__ = ["get_parser", "parse_by_type", "register_parser", "read_source", "compact_to_parquet"]
+__all__ = ["get_parser", "register_parser", "read_source", "stream_source", "compact_to_parquet"]

@@ -27,7 +27,6 @@ import gzip
 import json
 import urllib.error
 import urllib.request
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -184,7 +183,8 @@ def list_source_files(
         # pattern, so every slug in it already matches)
         base, _ = glob_base_and_regex(cfg.pattern)
         ext = "." + cfg.pattern.rsplit(".", 1)[1] if "." in cfg.pattern.rsplit("/", 1)[-1] else ""
-        return [f"{base}/{slug.replace('--', '/')}{ext}" for slug in slugs]
+        prefix = f"{base}/" if base else ""
+        return [f"{prefix}{slug.replace('--', '/')}{ext}" for slug in slugs]
     # single-file (multi-record) source: one path regardless of slug count
     return [cfg.pattern] if slugs else []
 
@@ -194,35 +194,21 @@ def read_source_http(
     cfg: SourceConfig,
     base_url: str,
     prefer_gzip: bool = False,
-    validate: bool = True,
     timeout: float = DEFAULT_TIMEOUT,
 ) -> DataFrame:
     """Load one source over HTTP as a typed DataFrame — same output contract
     as ``reader.read_source`` on a local glob."""
-    from .parsers import get_parser
-    from .reader import _RAW_SCHEMA, _rel_path, parse_file_records, typed_from_parsed
+    from .reader import parse_files
 
     paths = list_source_files(base_url, cfg, timeout)
-    pattern = cfg.pattern
-    glob_base, _ = glob_base_and_regex(pattern)
-    parser_type = cfg.type
-    source_name = cfg.name
-    base = base_url
-
+    base, _ = glob_base_and_regex(cfg.pattern)
     n_slices = max(1, min(len(paths), spark.sparkContext.defaultParallelism))
     files = spark.createDataFrame(
         [(p,) for p in paths], "rel_path string"
     ).repartition(n_slices)
 
-    def fetch_parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parser = get_parser(parser_type)
-        for pdf in batches:
-            out: list[tuple[str, str, str]] = []
-            for rel_path in pdf["rel_path"]:
-                raw_text = fetch_text(base, rel_path, prefer_gzip, timeout)
-                rel = _rel_path(rel_path, glob_base)
-                out.extend(parse_file_records(parser, source_name, rel, raw_text))
-            yield pd.DataFrame(out, columns=["slug", "raw", "payload"])
+    def read(pdf: pd.DataFrame):
+        for rel_path in pdf["rel_path"]:
+            yield rel_path, fetch_text(base_url, rel_path, prefer_gzip, timeout)
 
-    parsed = files.mapInPandas(fetch_parse, schema=_RAW_SCHEMA)
-    return typed_from_parsed(parsed, cfg, validate)
+    return parse_files(files, cfg, base, read)

@@ -76,6 +76,3 @@ def get_parser(type_name: str) -> ParserFn:
     except KeyError:
         raise ValueError(f"no parser registered for type {type_name!r}") from None
 
-
-def parse_by_type(type_name: str, raw: str) -> dict | list[dict]:
-    return get_parser(type_name)(raw)

@@ -8,6 +8,8 @@ Pipeline (all distributed, no driver-side file loops):
       -> from_json(json_payload, declared schema)  # JVM-side typing
       -> select(slug, *fields, raw)
 
+``stream_source`` runs the same steps over ``spark.readStream``.
+
 Parity notes:
 - slug from file path relative to the glob base, "/" -> "--", extension
   stripped (reference: src/SourceConfigResolver.ts:143-182).
@@ -26,6 +28,7 @@ queries run against columnar storage with pushdown (SURVEY §7.3.8).
 from __future__ import annotations
 
 import json
+import os
 from collections.abc import Iterator
 from urllib.parse import unquote, urlparse
 
@@ -33,6 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamReader
 
 from ..config import SourceConfig
 from ..functions import glob_base_and_regex, path_to_slug
@@ -47,49 +51,59 @@ _RAW_SCHEMA = T.StructType(
 )
 
 
-def _rel_path(file_uri: str, base_dir: str) -> str:
-    path = unquote(urlparse(file_uri).path) if "://" in file_uri else file_uri
-    base = base_dir.rstrip("/") + "/"
-    return path[len(base):] if path.startswith(base) else path.rsplit("/", 1)[-1]
+def parse_files(files: DataFrame, cfg: SourceConfig, base: str, read) -> DataFrame:
+    """Parse content files into the source's typed columns.
+
+    The per-batch parse loop of every content backend: ``read(pdf)``
+    yields ``(path, text)`` for each file in one Arrow batch of ``files``.
+    A file's slug comes from its path under ``base``, the glob's static
+    base, written in the same form as the paths; a wildcard-free pattern's
+    base is the file itself, slugged by its name.  Multi-record files need
+    an explicit slug per record (src/SourceLoader.ts:102-107); a
+    single-record file takes the path slug and must not contradict an
+    embedded one (src/SourceLoader.ts:163-169)."""
+    parser_type, source_name = cfg.type, cfg.name
+    prefix = base.rstrip("/") + "/" if base else ""
+
+    def parse_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        parser = get_parser(parser_type)
+        for pdf in batches:
+            out: list[tuple[str, str, str]] = []
+            for path, raw_text in read(pdf):
+                if path == base:
+                    rel = path.rpartition("/")[2]
+                elif path.startswith(prefix):
+                    rel = path[len(prefix):]
+                else:
+                    raise ValueError(
+                        f"[{source_name}] content file {path} is not under {base}"
+                    )
+                path_slug = path_to_slug(rel)
+                parsed = parser(raw_text)
+                if isinstance(parsed, list):
+                    for rec in parsed:
+                        slug = rec.get("slug")
+                        if slug is None:
+                            raise ValueError(
+                                f"[{source_name}] record in {rel} missing explicit slug"
+                            )
+                        payload = json.dumps(rec, ensure_ascii=False, default=str)
+                        out.append((str(slug), raw_text, payload))
+                    continue
+                embedded = parsed.get("slug")
+                if embedded is not None and str(embedded) != path_slug:
+                    raise ValueError(
+                        f"[{source_name}] slug mismatch in {rel}: "
+                        f"file says {embedded!r}, path says {path_slug!r}"
+                    )
+                payload = json.dumps(parsed, ensure_ascii=False, default=str)
+                out.append((path_slug, raw_text, payload))
+            yield pd.DataFrame(out, columns=["slug", "raw", "payload"])
+
+    return typed_from_parsed(files.mapInPandas(parse_batch, schema=_RAW_SCHEMA), cfg)
 
 
-def parse_file_records(
-    parser, source_name: str, rel: str, raw_text: str
-) -> list[tuple[str, str, str]]:
-    """Parse ONE content file into (slug, raw, json_payload) records.
-
-    The shared per-file semantics of every backend (local glob scan and
-    HTTP fetch alike): multi-record files need explicit slugs, single-record
-    files take the path slug and must not contradict an embedded one."""
-    path_slug = path_to_slug(rel)
-    parsed = parser(raw_text)
-    out: list[tuple[str, str, str]] = []
-    if isinstance(parsed, list):
-        # multi-record file: explicit slug per record
-        for rec in parsed:
-            slug = rec.get("slug")
-            if slug is None:
-                raise ValueError(
-                    f"[{source_name}] record in {rel} missing explicit slug"
-                )
-            out.append(
-                (str(slug), raw_text, json.dumps(rec, ensure_ascii=False, default=str))
-            )
-    else:
-        embedded = parsed.get("slug")
-        if embedded is not None and str(embedded) != path_slug:
-            # parity: src/SourceLoader.ts:163-169
-            raise ValueError(
-                f"[{source_name}] slug mismatch in {rel}: "
-                f"file says {embedded!r}, path says {path_slug!r}"
-            )
-        out.append(
-            (path_slug, raw_text, json.dumps(parsed, ensure_ascii=False, default=str))
-        )
-    return out
-
-
-def typed_from_parsed(parsed: DataFrame, cfg: SourceConfig, validate: bool) -> DataFrame:
+def typed_from_parsed(parsed: DataFrame, cfg: SourceConfig) -> DataFrame:
     """(slug, raw, payload) -> typed columns via from_json + required checks.
 
     Shared typing/validation tail of every content backend."""
@@ -107,7 +121,7 @@ def typed_from_parsed(parsed: DataFrame, cfg: SourceConfig, validate: bool) -> D
         F.col("payload").alias("__staticql_payload"),
     ).select("slug", "doc.*", "raw", "__staticql_payload")
 
-    if validate and cfg.schema:
+    if cfg.schema:
         props = cfg.schema.get("properties", {})
         required = [
             f for f in cfg.schema.get("required", []) if f not in ("slug", "raw")
@@ -231,11 +245,48 @@ def typed_from_parsed(parsed: DataFrame, cfg: SourceConfig, validate: bool) -> D
     return typed.drop("__staticql_payload")
 
 
+def _read_content(reader, cfg: SourceConfig, base_dir: str) -> DataFrame:
+    """The local read shared by batch and stream: ``reader`` is
+    ``spark.read`` or ``spark.readStream``.
+
+    Lists the files (text read with ``wholetext``, one row per file, path
+    from ``input_file_name()``) and parses them.  Slugs are taken relative
+    to the glob base in the form ``input_file_name()`` gives it: a bare
+    base resolves against the working directory, as Spark's listing does,
+    and a URI base (``file://``, ``s3a://``) keeps only its path."""
+    pattern = f"{base_dir}/{cfg.pattern}" if base_dir else cfg.pattern
+    base, _ = glob_base_and_regex(pattern)
+    path = pattern
+    if "**" in pattern:
+        # Hadoop globs are not recursive; '**' patterns read the static base
+        # dir with recursiveFileLookup + a suffix filter instead.
+        reader = reader.option("recursiveFileLookup", "true").option(
+            "pathGlobFilter", pattern.rsplit("/", 1)[-1]
+        )
+        path = base
+    elif base == pattern and isinstance(reader, DataStreamReader):
+        # a stream source must be a directory: a one-file pattern streams
+        # the file's directory filtered to its name
+        parent, _, name = pattern.rpartition("/")
+        reader, path = reader.option("pathGlobFilter", name), parent or "."
+    files = reader.text(path, wholetext=True).select(
+        F.col("value").alias("raw_text"),
+        F.input_file_name().alias("file_path"),
+    )
+    uri = urlparse(base)
+    base = uri.path if uri.scheme else os.path.abspath(base)
+
+    def read(pdf: pd.DataFrame):
+        for raw_text, file_path in zip(pdf["raw_text"], pdf["file_path"]):
+            yield unquote(urlparse(file_path).path), raw_text
+
+    return parse_files(files, cfg, base, read)
+
+
 def read_source(
     spark: SparkSession,
     cfg: SourceConfig,
     base_dir: str = "",
-    validate: bool = True,
     prefer_gzip: bool = False,
 ) -> DataFrame:
     """Load one source as a typed DataFrame (slug, *schema fields, raw).
@@ -247,45 +298,28 @@ def read_source(
     if base_dir.startswith(("http://", "https://")):
         from .http import read_source_http
 
-        return read_source_http(
-            spark, cfg, base_dir, prefer_gzip=prefer_gzip, validate=validate
-        )
+        return read_source_http(spark, cfg, base_dir, prefer_gzip=prefer_gzip)
     if cfg.type == "parquet":
         path = cfg.pattern if "/" in cfg.pattern else f"{base_dir}/{cfg.pattern}"
         return spark.read.parquet(path)
+    return _read_content(spark.read, cfg, base_dir)
 
-    pattern = f"{base_dir}/{cfg.pattern}" if base_dir else cfg.pattern
-    glob_base, _ = glob_base_and_regex(pattern)
-    parser_type = cfg.type
-    source_name = cfg.name
 
-    reader = spark.read
-    if "**" in pattern:
-        # Hadoop globs are not recursive; '**' patterns read the static base
-        # dir with recursiveFileLookup + a suffix filter instead.
-        suffix = pattern.rsplit("/", 1)[-1]
-        reader = reader.option("recursiveFileLookup", "true").option(
-            "pathGlobFilter", suffix
-        )
-        read_path = glob_base
-    else:
-        read_path = pattern
-    files = reader.text(read_path, wholetext=True).select(
-        F.col("value").alias("raw_text"),
-        F.input_file_name().alias("file_path"),
-    )
+def stream_source(
+    spark: SparkSession, cfg: SourceConfig, base_dir: str = ""
+) -> DataFrame:
+    """Stream one content source: the typed, validated columns of
+    ``read_source``, as a streaming DataFrame over the files matching the
+    source's pattern under ``base_dir``.
 
-    def parse_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parser = get_parser(parser_type)
-        for pdf in batches:
-            out: list[tuple[str, str, str]] = []
-            for raw_text, file_path in zip(pdf["raw_text"], pdf["file_path"]):
-                rel = _rel_path(file_path, glob_base)
-                out.extend(parse_file_records(parser, source_name, rel, raw_text))
-            yield pd.DataFrame(out, columns=["slug", "raw", "payload"])
-
-    parsed = files.mapInPandas(parse_batch, schema=_RAW_SCHEMA)
-    return typed_from_parsed(parsed, cfg, validate)
+    Spark's file-source log makes ingestion exactly-once by path: each
+    trigger parses only the files not yet seen under its checkpoint, and a
+    path is ingested once, so an edit to an already-ingested file is not
+    re-read.  Local and Hadoop file systems only: ``parquet`` sources and
+    ``http(s)://`` base dirs raise ``ValueError``."""
+    if cfg.type == "parquet" or base_dir.startswith(("http://", "https://")):
+        raise ValueError(f"[{cfg.name}] only content files can be streamed")
+    return _read_content(spark.readStream, cfg, base_dir)
 
 
 def compact_to_parquet(df: DataFrame, path: str, partitions: int | None = None) -> None:

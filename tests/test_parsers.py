@@ -7,8 +7,6 @@ prefix hexification incl. Unicode (tests/constants.test.ts:20-40).
 
 from __future__ import annotations
 
-import json
-
 import pytest
 
 from staticql_spark.functions import (
@@ -20,7 +18,7 @@ from staticql_spark.functions import (
     slug_to_path,
 )
 from staticql_spark.sources.parsers import (
-    parse_by_type,
+    get_parser,
     parse_csv,
     parse_frontmatter,
     parse_json,
@@ -63,7 +61,7 @@ def test_csv_and_registry_injection():
     rows = parse_csv("slug,name\nx,1\ny,2\n")
     assert rows == [{"slug": "x", "name": "1"}, {"slug": "y", "name": "2"}]
     register_parser("tsv", lambda raw: [{"slug": r.split("\t")[0]} for r in raw.splitlines()])
-    assert parse_by_type("tsv", "a\t1\nb\t2") == [{"slug": "a"}, {"slug": "b"}]
+    assert get_parser("tsv")("a\t1\nb\t2") == [{"slug": "a"}, {"slug": "b"}]
 
 
 def test_slug_path_roundtrip():
@@ -100,100 +98,3 @@ def test_cursor_invalid():
         decode_cursor("!!!notbase64!!!")
     with pytest.raises(ValueError, match="invalid cursor"):
         decode_cursor("eyJ4IjogMX0=")  # valid b64 JSON but no slug
-
-
-# ---------------------------------------------------- PySpark 4 DataSource
-
-
-def test_content_datasource_markdown(spark, content_dir):
-    from staticql_spark.sources.datasource import ContentDataSource
-
-    spark.dataSource.register(ContentDataSource)
-    df = (
-        spark.read.format("staticql_content")
-        .option("pattern", f"{content_dir}/content/herbs/*.md")
-        .option("type", "markdown")
-        .load()
-    )
-    rows = {r["slug"]: json.loads(r["payload"]) for r in df.collect()}
-    assert set(rows) == {"arctium-lappa", "centella-asiatica", "cymbopogon-citratus"}
-    assert rows["arctium-lappa"]["name"] == "ゴボウ"
-    assert rows["arctium-lappa"]["compoundSlugs"] == ["inulin", "arctigenin"]
-
-
-def test_content_datasource_multirecord_yaml(spark, content_dir):
-    from staticql_spark.sources.datasource import ContentDataSource
-
-    spark.dataSource.register(ContentDataSource)
-    df = (
-        spark.read.format("staticql_content")
-        .option("pattern", f"{content_dir}/content/tags.yaml")
-        .option("type", "yaml")
-        .load()
-    )
-    slugs = sorted(r["slug"] for r in df.collect())
-    assert slugs == [
-        "antibacterial",
-        "antiinflammatory",
-        "antioxidant",
-        "memory",
-        "relaxation",
-        "skin",
-    ]
-
-
-def test_content_datasource_nested_glob(spark, content_dir):
-    from staticql_spark.sources.datasource import ContentDataSource
-
-    spark.dataSource.register(ContentDataSource)
-    df = (
-        spark.read.format("staticql_content")
-        .option("pattern", f"{content_dir}/content/recipes/**/*.md")
-        .option("type", "markdown")
-        .load()
-    )
-    slugs = sorted(r["slug"] for r in df.collect())
-    # nested dirs become '--'-joined slugs (reference slug semantics)
-    assert all("--" in s for s in slugs) and len(slugs) == 2
-
-
-def test_content_datasource_streaming_incremental(spark, tmp_path):
-    """readStream over staticql_content: each availableNow run ingests
-    exactly the files that appeared since the last checkpointed offset."""
-    from staticql_spark.sources.datasource import ContentDataSource
-
-    spark.dataSource.register(ContentDataSource)
-    content = tmp_path / "drops"
-    content.mkdir()
-    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-
-    def write_doc(slug, name):
-        (content / f"{slug}.md").write_text(f"---\nname: {name}\n---\nbody\n")
-
-    def run_once():
-        q = (
-            spark.readStream.format("staticql_content")
-            .option("pattern", f"{content}/*.md")
-            .option("type", "markdown")
-            .load()
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    write_doc("alpha", "A")
-    write_doc("beta", "B")
-    run_once()
-    first = spark.read.parquet(out).collect()
-    assert {r["slug"] for r in first} == {"alpha", "beta"}
-
-    write_doc("gamma", "C")
-    run_once()
-    rows = spark.read.parquet(out).collect()
-    # exactly-once: alpha/beta NOT re-ingested on the second run
-    assert sorted(r["slug"] for r in rows) == ["alpha", "beta", "gamma"]
-    payload = {r["slug"]: json.loads(r["payload"]) for r in rows}
-    assert payload["gamma"]["name"] == "C"

@@ -37,6 +37,25 @@ def test_second_content_read_scans_the_snapshot(herbal):
     assert "Scan ExistingRDD" in p, p
 
 
+@pytest.mark.parametrize("name", ["herbs", "recipes"])
+def test_content_read_is_one_text_scan_into_one_parse(herbal, name):
+    # The first parse of a content source ('*' herbs, '**' recipes): one
+    # wholetext FileScan whose rows carry their file path straight into
+    # exactly one MapInPandas parse.
+    from staticql_spark.sources import read_source
+
+    df = read_source(herbal.spark, herbal.configs[name], herbal.base_dir)
+    p = df._jdf.queryExecution().executedPlan().toString()
+    assert p.count("MapInPandas") == 1 and p.count("FileScan") == 1, p
+    assert re.search(
+        r"MapInPandas parse_batch\(raw_text#\d+, file_path#\d+\)[^\n]*\n"
+        r"\s*\+- \*\(\d+\) Project \[value#\d+ AS raw_text#\d+, "
+        r"input_file_name\(\) AS file_path#\d+\]\n"
+        r"\s*\+- FileScan text \[value#\d+\]",
+        p,
+    ), p
+
+
 def test_filter_pushdown_eq(spark):
     p = plan(entrymod.q_where_eq(spark, SF_SMOKE))
     assert re.search(r"PushedFilters:.*EqualTo\(c_mktsegment,BUILDING\)", p), p

@@ -3,6 +3,8 @@ checked against the batch twin (same code path, SURVEY §2.9 note)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -1677,3 +1679,145 @@ def test_stream_rater_severity_ttl_plumbing_matches_batch(spark, tmp_path_factor
         for r in rows
     }
     assert got == batch
+
+
+# ------------------------------------------------- streamed content sources
+
+_DROPS = {
+    "pattern": "drops/*.md",
+    "type": "markdown",
+    "schema": {
+        "type": "object",
+        "properties": {"name": {"type": "string"}},
+        "required": ["name"],
+    },
+}
+
+
+def _source(name, raw):
+    from staticql_spark.config import resolve_config
+
+    return resolve_config({"sources": {name: raw}})[name]
+
+
+def _drop(root, rel, name):
+    p = root / rel
+    p.parent.mkdir(parents=True, exist_ok=True)
+    p.write_text(f"---\nname: {name}\n---\nbody\n", encoding="utf-8")
+
+
+def _stream_runs(spark, cfg, root, tmp_path, between):
+    """Two availableNow runs of ``stream_source`` sharing one checkpoint;
+    ``between()`` changes the content after the first.  Returns the sink's
+    rows after each run."""
+    from staticql_spark.sources import stream_source
+
+    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+
+    def run():
+        q = (
+            stream_source(spark, cfg, str(root))
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ck)
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120)
+        return spark.read.parquet(out).collect()
+
+    first = run()
+    between()
+    return first, run()
+
+
+def test_stream_source_flat_glob_ingests_new_files_once(spark, tmp_path):
+    root = tmp_path / "site"
+    _drop(root, "drops/alpha.md", "A")
+    _drop(root, "drops/beta.md", "B")
+
+    def between():
+        _drop(root, "drops/gamma.md", "C")
+        _drop(root, "drops/alpha.md", "A2")  # a seen path is not re-read
+
+    first, second = _stream_runs(spark, _source("drops", _DROPS), root, tmp_path, between)
+    assert sorted(r["slug"] for r in first) == ["alpha", "beta"]
+    assert sorted((r["slug"], r["name"]) for r in second) == [
+        ("alpha", "A"),
+        ("beta", "B"),
+        ("gamma", "C"),
+    ]
+
+
+def test_stream_source_nested_glob(spark, tmp_path):
+    root = tmp_path / "site"
+    _drop(root, "drops/top.md", "T")
+    _drop(root, "drops/g1/x1.md", "X1")
+    _drop(root, "drops/g2/h/x2.md", "X2")
+    cfg = _source("drops", {**_DROPS, "pattern": "drops/**/*.md"})
+
+    first, second = _stream_runs(
+        spark, cfg, root, tmp_path, lambda: _drop(root, "drops/g3/x3.md", "X3")
+    )
+    assert sorted(r["slug"] for r in first) == ["g1--x1", "g2--h--x2", "top"]
+    assert sorted(r["slug"] for r in second) == ["g1--x1", "g2--h--x2", "g3--x3", "top"]
+
+
+def test_stream_source_single_file_yaml(spark, tmp_path):
+    root = tmp_path / "site"
+    (root / "y" / "sub").mkdir(parents=True)
+    (root / "y" / "sub" / "other.yaml").write_text("- slug: no\n  name: N\n")
+    (root / "y" / "tags.yaml").write_text("- slug: a\n  name: A\n- slug: b\n  name: B\n")
+    cfg = _source("tags", {**_DROPS, "pattern": "y/tags.yaml", "type": "yaml"})
+
+    first, second = _stream_runs(spark, cfg, root, tmp_path, lambda: None)
+    assert sorted((r["slug"], r["name"]) for r in first) == [("a", "A"), ("b", "B")]
+    assert sorted(r["slug"] for r in second) == ["a", "b"]
+
+
+def test_stream_source_schema_and_validation_match_read_source(
+    spark, content_dir, tmp_path
+):
+    from pyspark.errors import StreamingQueryException
+
+    from staticql_spark.config import resolve_config
+    from staticql_spark.sources import read_source, stream_source
+    from tests.conftest import CONFIG
+
+    for cfg in resolve_config(CONFIG).values():
+        assert (
+            stream_source(spark, cfg, str(content_dir)).schema
+            == read_source(spark, cfg, str(content_dir)).schema
+        ), cfg.name
+
+    root = tmp_path / "site"
+    (root / "drops").mkdir(parents=True)
+    (root / "drops" / "bad.md").write_text("---\ntitle: no name\n---\n")
+    cfg = _source("drops", _DROPS)
+    message = "[drops] required field 'name' is null for slug=bad"
+    with pytest.raises(Exception, match=re.escape(message)):
+        read_source(spark, cfg, str(root)).collect()
+    with pytest.raises(StreamingQueryException, match=re.escape(message)):
+        _stream_runs(spark, cfg, root, tmp_path, lambda: None)
+
+
+@pytest.mark.parametrize("form", ["absolute", "cwd-relative", "file-uri"])
+def test_nested_slugs_under_every_base_dir_form(spark, content_dir, tmp_path, form):
+    """A '**' source's slugs keep their directories whatever form base_dir
+    takes: the relative path is taken against the base as Spark names it."""
+    import os
+
+    from staticql_spark.config import resolve_config
+    from staticql_spark.sources import read_source
+    from tests.conftest import CONFIG
+
+    base_dir = {
+        "absolute": str(content_dir),
+        "cwd-relative": os.path.relpath(content_dir),
+        "file-uri": f"file://{content_dir}",
+    }[form]
+    cfg = resolve_config(CONFIG)["recipes"]
+    want = ["recipeGroup001--001", "recipeGroup002--001"]
+    assert sorted(r["slug"] for r in read_source(spark, cfg, base_dir).collect()) == want
+    first, second = _stream_runs(spark, cfg, base_dir, tmp_path, lambda: None)
+    assert sorted(r["slug"] for r in first) == sorted(r["slug"] for r in second) == want
