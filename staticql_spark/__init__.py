@@ -16,11 +16,14 @@ Two surfaces over one core (SURVEY §7.0):
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 
 from .config import Relation, SourceConfig, resolve_config
 from .plans.filters import Filter, NeedsIndexError
 from .query import QueryBuilder
+from .relations import relation_matches
 from .session import get_spark
 from .sources.parsers import register_parser
 from .sources.reader import read_source
@@ -47,11 +50,15 @@ class StaticQL:
     An instance reads a snapshot of its sources.  The first action over a
     parsed source (content files or the HTTP backend) lists, parses and
     types it once, and every later read, join, ``sql()`` view and index
-    build of the instance scans those rows.  Content edited afterwards is
-    not seen: ``define()`` again (or ``fresh()``) to read it.  The snapshot
-    is a local checkpoint, freed with the instance's frames.  ``type:
-    parquet`` sources and caller-supplied ``dataframes`` are columnar
-    already and are used as given.
+    build of the instance scans those rows.  The snapshot also keeps one
+    match table per (source, relation), built by the first read that
+    attaches the relation (a ``join()`` or a relation-path filter); later
+    reads join that table instead of recomputing the relation.  Content
+    edited afterwards is not seen: ``define()`` again (or ``fresh()``) to
+    read it.  The snapshot is a set of local checkpoints, freed with the
+    instance's frames.  ``type: parquet`` sources and caller-supplied
+    ``dataframes`` are columnar already and are used as given, and a
+    relation that reads one of them is computed per read.
     """
 
     def __init__(
@@ -74,24 +81,56 @@ class StaticQL:
         self.prefer_gzip = prefer_gzip
         self._supplied = dict(dataframes or {})
         self._dfs: dict[str, DataFrame] = dict(self._supplied)
+        self._tables: dict[tuple[str, str], DataFrame] = {}
+
+    def _base_dir(self, name: str) -> str:
+        # per-source storage routing (MultiRepository.ts:47-80): a source
+        # with its own baseDir reads from that repository; others share
+        # the session base_dir.
+        cfg = self.configs[name]
+        return cfg.base_dir if cfg.base_dir is not None else self.base_dir
+
+    def _is_snapshot(self, name: str) -> bool:
+        """Whether ``df(name)`` is a snapshot: a source ``read_source``
+        parses (content files or the HTTP backend), not a parquet scan or a
+        caller-supplied frame."""
+        return name not in self._supplied and (
+            self.configs[name].type != "parquet"
+            or self._base_dir(name).startswith(("http://", "https://"))
+        )
 
     def df(self, name: str) -> DataFrame:
         if name not in self.configs:
             raise ValueError(f"unknown source: {name}")
         if name not in self._dfs:
             cfg = self.configs[name]
-            # per-source storage routing (MultiRepository.ts:47-80): a source
-            # with its own baseDir reads from that repository; others share
-            # the session base_dir.
-            base_dir = cfg.base_dir if cfg.base_dir is not None else self.base_dir
-            df = read_source(self.spark, cfg, base_dir, prefer_gzip=self.prefer_gzip)
-            if cfg.type != "parquet" or base_dir.startswith(("http://", "https://")):
+            df = read_source(self.spark, cfg, self._base_dir(name), prefer_gzip=self.prefer_gzip)
+            if self._is_snapshot(name):
                 # Parsed sources become a snapshot: the first action parses
                 # and types them once, later reads scan the kept rows.
                 # Parquet stays a plain scan so filters still push down.
                 df = df.localCheckpoint(eager=False)
             self._dfs[name] = df
         return self._dfs[name]
+
+    def _match_table(self, name: str, rel_name: str) -> DataFrame | None:
+        """The (slug, _matches) table of relation ``rel_name`` over the
+        whole of source ``name``, kept with the snapshot; None when the
+        relation reads a source that is not a snapshot (it is then computed
+        per read over the filtered frame, so its filters still push down).
+        """
+        key = (name, rel_name)
+        if key not in self._tables:
+            rel = self.configs[name].relations[rel_name]
+            names = {name, rel.to} | ({rel.through} if rel.is_through else set())
+            if not all(self._is_snapshot(n) for n in names):
+                return None
+            sources = {n: self.df(n) for n in names}
+            # Under AQE the call itself runs the table's shuffle, so a
+            # failed build raises here and nothing is kept.
+            table = relation_matches(sources[name], rel, sources).localCheckpoint(eager=False)
+            self._tables[key] = table
+        return self._tables[key]
 
     def fresh(self) -> "StaticQL":
         """A new instance over the same sources, whose snapshot is taken
@@ -115,7 +154,12 @@ class StaticQL:
             raise ValueError(f"unknown source: {name}")
         dfs = {n: self.df(n) for n in self.configs}
         return QueryBuilder(
-            dfs[name], self.configs[name], dfs, self.configs, self.strict_index
+            dfs[name],
+            self.configs[name],
+            dfs,
+            self.configs,
+            self.strict_index,
+            match_table=functools.partial(self._match_table, name),
         )
 
     def sql(self, query: str) -> DataFrame:

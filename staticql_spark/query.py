@@ -19,9 +19,12 @@ foreign loads), limit pushdown (≈ early-terminated shard walks).
 The builder reads the source frames of its ``StaticQL``, and each parsed
 source there is a snapshot: its content files are parsed and typed by the
 first action, and every later query of that instance scans the kept rows
-(a ``Scan ExistingRDD`` in the plan, no Python parse).  Edits made after
-that are seen by a new ``define()``; the rows are freed with the
-instance's frames.
+(a ``Scan ExistingRDD`` in the plan, no Python parse).  Relation match
+tables are part of the snapshot: the first read that attaches a relation
+keeps its (slug, matches) table over the whole source, and later reads
+broadcast-join it (no explode, aggregate or shuffle for the relation).
+Edits made after that are seen by a new ``define()`` or ``fresh()``; the
+rows are freed with the instance's frames.
 
 Filters on fields without a declared index raise NeedsIndexError for parity
 (QueryBuilder.ts:332-352); pass ``strict_index=False`` to define() to lift
@@ -30,7 +33,7 @@ the restriction (Spark can filter any column).
 
 from __future__ import annotations
 
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -38,7 +41,7 @@ from pyspark.sql import functions as F
 from .config import SourceConfig
 from .plans.filters import Filter, NeedsIndexError, compile_filters, field_column
 from .plans.pagination import Page, paginate
-from .relations import attach_relation
+from .relations import attach_matches, relation_matches
 
 DEFAULT_PAGE_SIZE = 20  # reference: src/QueryBuilder.ts:50
 
@@ -51,12 +54,14 @@ class QueryBuilder:
         all_dfs: dict[str, DataFrame],
         all_cfgs: dict[str, SourceConfig],
         strict_index: bool = True,
+        match_table: Callable[[str], DataFrame | None] | None = None,
     ):
         self._df = source_df
         self._cfg = cfg
         self._dfs = all_dfs
         self._cfgs = all_cfgs
         self._strict = strict_index
+        self._match_table = match_table
         self._filters: list[Filter] = []
         self._joins: list[str] = []
         self._order_key = "slug"
@@ -127,7 +132,9 @@ class QueryBuilder:
                 raise NeedsIndexError(self._cfg.name, [Filter(f, "eq", "<orderBy>")])
 
     def plan(self, with_joins: bool = True) -> DataFrame:
-        """The logical plan as a DataFrame (no action).
+        """The logical plan as a DataFrame.  It runs no action, except that
+        the first plan of an instance to attach a relation builds that
+        relation's kept match table.
 
         Filters on relation-path fields (``herbs.slug``) attach the relation
         before filtering — the query-time analogue of the reference
@@ -141,10 +148,9 @@ class QueryBuilder:
             for f in self._filters
             if "." in f.field and f.field.split(".", 1)[0] in self._cfg.relations
         }
-        attached: list[str] = []
-        for rel_name in sorted(filter_rels):
-            df = attach_relation(df, self._cfg.relations[rel_name], self._dfs, self._cfgs)
-            attached.append(rel_name)
+        attached = sorted(filter_rels)
+        for rel_name in attached:
+            df = self._attach(df, rel_name)
         cond = compile_filters(df, self._filters)
         if cond is not None:
             df = df.filter(cond)
@@ -154,10 +160,17 @@ class QueryBuilder:
         if with_joins:
             for rel_name in self._joins:
                 if rel_name not in attached:
-                    df = attach_relation(
-                        df, self._cfg.relations[rel_name], self._dfs, self._cfgs
-                    )
+                    df = self._attach(df, rel_name)
         return df
+
+    def _attach(self, df: DataFrame, rel_name: str) -> DataFrame:
+        """Attach one relation: from the source's kept match table when its
+        ``StaticQL`` keeps one, else computed over ``df`` itself."""
+        rel = self._cfg.relations[rel_name]
+        table = self._match_table(rel_name) if self._match_table else None
+        if table is None:
+            table = relation_matches(df, rel, self._dfs)
+        return attach_matches(df, rel, table)
 
     def to_df(self) -> DataFrame:
         """Spark-native escape hatch: the filtered+joined DataFrame."""
@@ -214,6 +227,7 @@ class QueryBuilder:
 
     def find(self, slug: str):
         """Point lookup by primary key (QueryBuilder.ts:104-112)."""
-        df = self.plan()
-        rows = df.filter(F.col("slug").cast("string") == str(slug)).limit(1).collect()
+        # Slugs are unique: collect the filtered rows in one job (a limit
+        # would scale its scan up over the partitions in several).
+        rows = self.plan().filter(F.col("slug").cast("string") == str(slug)).collect()
         return rows[0] if rows else None

@@ -26,7 +26,12 @@ Reference semantics (src/utils/relationResolver.ts, src/QueryBuilder.ts
 Scale notes: the foreign side aggregates to one row per key *before* the
 join where possible; content dims are broadcast (they are small by
 definition in this engine — the reference caps at 100k records), so the
-fact side never shuffles for relation attachment.
+fact side never shuffles for relation attachment.  A ``StaticQL`` keeps the
+:func:`relation_matches` table of each relation over its whole source
+snapshot (the query-time analogue of the reference denormalizing relation
+fields into its index, src/IndexBuilder.ts:495-520), so a read attaches a
+relation with one broadcast join of the kept table; only a relation that
+reads a parquet source or a caller-supplied frame is computed per read.
 """
 
 from __future__ import annotations
@@ -126,35 +131,38 @@ def _matches_per_slug(
     return _ordered_matches(lhs.join(rhs, cond, "inner"))
 
 
-def attach_relation(
+def relation_matches(
     df: DataFrame,
     rel: Relation,
     sources: dict[str, DataFrame],
-    configs: dict[str, SourceConfig] | None = None,
     containment_fallback: bool = False,
 ) -> DataFrame:
-    """Attach one relation as a new column named ``rel.name``.
+    """The match table of ``rel`` over ``df``: (slug, _matches) for the rows
+    of ``df`` with >=1 match, ``_matches`` ordered as in
+    :func:`_ordered_matches`.
 
-    to-one -> struct (null when no match); to-many -> array<struct> ([]).
-
-    ``containment_fallback=True`` reproduces the reference's J7 quirk on
-    DIRECT relations (multi-valued local keys probe by substring
-    containment); through relations always match exactly.
+    A slug's matches depend only on its own row (slugs are unique per
+    source), so the table over a whole source serves any filtered frame of
+    it.
     """
     if rel.is_through:
-        matches = _through_matches(df, rel, sources)
-    else:
-        foreign = sources[rel.to]
-        # hasOne/hasMany and belongsTo/belongsToMany share one probe path
-        # (inverse declaration only changes attach arity)
-        matches = _matches_per_slug(
-            df,
-            rel.local_key,
-            foreign,
-            rel.foreign_key,
-            containment_fallback=containment_fallback,
-        )
+        return _through_matches(df, rel, sources)
+    # hasOne/hasMany and belongsTo/belongsToMany share one probe path
+    # (inverse declaration only changes attach arity)
+    return _matches_per_slug(
+        df,
+        rel.local_key,
+        sources[rel.to],
+        rel.foreign_key,
+        containment_fallback=containment_fallback,
+    )
 
+
+def attach_matches(df: DataFrame, rel: Relation, matches: DataFrame) -> DataFrame:
+    """Attach a (slug, _matches) table as a new column named ``rel.name``.
+
+    to-one -> struct (null when no match); to-many -> array<struct> ([]).
+    """
     out = df.join(F.broadcast(matches), "slug", "left")
     if rel.is_to_one or rel.rel_type == "belongsTo":
         out = out.withColumn(rel.name, F.col("_matches").getItem(0))
@@ -164,6 +172,25 @@ def attach_relation(
             F.coalesce(F.col("_matches"), F.array().cast(out.schema["_matches"].dataType)),
         )
     return out.drop("_matches")
+
+
+def attach_relation(
+    df: DataFrame,
+    rel: Relation,
+    sources: dict[str, DataFrame],
+    configs: dict[str, SourceConfig] | None = None,
+    containment_fallback: bool = False,
+) -> DataFrame:
+    """Attach one relation, computed over ``df`` itself, as a new column
+    named ``rel.name`` (see :func:`attach_matches`).
+
+    ``containment_fallback=True`` reproduces the reference's J7 quirk on
+    DIRECT relations (multi-valued local keys probe by substring
+    containment); through relations always match exactly.
+    """
+    return attach_matches(
+        df, rel, relation_matches(df, rel, sources, containment_fallback)
+    )
 
 
 def _through_matches(

@@ -37,6 +37,23 @@ def test_second_content_read_scans_the_snapshot(herbal):
     assert "Scan ExistingRDD" in p, p
 
 
+def test_second_join_read_attaches_the_kept_match_table(herbal):
+    # The first read that joins a relation keeps its match table with the
+    # snapshot; the next join read broadcasts that table: no explode and no
+    # aggregate left for the relation.
+    q = lambda: herbal.from_("herbs").where("tagSlugs", "eq", "memory").join("tags")
+    q().exec()
+    df = q().plan()
+    assert [(r["slug"], [t["slug"] for t in r["tags"]]) for r in df.collect()] == [
+        ("centella-asiatica", ["memory", "skin"])
+    ]
+    p = df._jdf.queryExecution().executedPlan().toString()
+    for node in ("HashAggregate", "Generate explode", "MapInPandas"):
+        assert node not in p, p
+    assert "BroadcastHashJoin" in p, p
+    assert re.search(r"Scan ExistingRDD\[slug#\d+,_matches#\d+\]", p), p
+
+
 @pytest.mark.parametrize("name", ["herbs", "recipes"])
 def test_content_read_is_one_text_scan_into_one_parse(herbal, name):
     # The first parse of a content source ('*' herbs, '**' recipes): one

@@ -258,6 +258,22 @@ def test_instance_reads_a_snapshot_of_its_content(spark, content_dir, tmp_path):
     assert again.from_("herbs").find("arctium-lappa")["name"] == "牛蒡"
 
 
+def test_find_is_one_job(herbal):
+    # slugs are unique, so find collects its filtered rows in one job, for
+    # a hit and for a miss alike
+    sc = herbal.spark.sparkContext
+    herbal.from_("herbs").find("arctium-lappa")  # the snapshot's first parse
+    for slug, name in [("arctium-lappa", "ゴボウ"), ("no-such-herb", None)]:
+        group = f"test-find-{slug}"
+        sc.setJobGroup(group, "find")
+        try:
+            row = herbal.from_("herbs").find(slug)
+        finally:
+            sc._jsc.clearJobGroup()
+        assert (row and row["name"]) == name
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
 def test_failed_first_read_is_not_kept(spark, tmp_path):
     # A source whose first read fails validation fails again on the next
     # read of the same instance: no partial snapshot stands in for it.
