@@ -181,7 +181,6 @@ def knn_classify(
     id_col: str = "vec_id",
     label_col: str = "label",
     neighbors: DataFrame | None = None,
-    symmetric: bool = False,
 ) -> DataFrame:
     """k-NN majority-vote classification over an embedding column — the
     label-propagation step a pipeline uses to extend a small labeled seed
@@ -193,11 +192,13 @@ def knn_classify(
     a deterministic (votes DESC, label ASC) tiebreak. Returns one row per
     query: (query_id, pred_label, votes, true_label, correct).
 
-    Scale: inherits cosine_topk's broadcast(queries) × corpus scan; the
-    vote aggregation runs on |queries| × k rows, which is broadcast-sized
-    by construction — labels attach via a broadcast join of that tiny
-    pair table against the corpus label projection, so the corpus is
-    never shuffled. Swap cosine_topk for ivf_query/lsh_topk candidates to
+    Scale: inherits cosine_topk's block kernel (one broadcast query block
+    against the corpus exchanged once into blocks; about k rows per query
+    per block leave the kernel); the vote aggregation runs on
+    |queries| × k rows, which is broadcast-sized by construction — labels
+    attach via a broadcast join of that tiny pair table against the
+    corpus label projection, so the corpus is never shuffled for the
+    vote. Swap cosine_topk for ivf_query/lsh_topk candidates to
     make the neighbor stage sublinear; the vote tail is unchanged.
     """
     from .similarity import cosine_topk
@@ -214,8 +215,7 @@ def knn_classify(
     else:
         nbrs = F.broadcast(
             cosine_topk(
-                queries, corpus, k=k, vec_col=vec_col, id_col=id_col,
-                symmetric=symmetric,
+                queries, corpus, k=k, vec_col=vec_col, id_col=id_col
             ).select("query_id", "neighbor_id")
         )
     labels = corpus.select(
@@ -275,17 +275,15 @@ def label_noise_report(
     One row per label: (label, n, n_flagged, noise_rate), noise_rate
     rounded 6.
 
-    Scale: inherits knn_classify's shape (broadcast queries x corpus for
-    the exact path; pass ``neighbors=`` from ivf_query for the sublinear
-    path at web scale — corpus-as-queries is exactly the case where you
-    would); the audit tail is a |labels|-row aggregate.
+    Scale: inherits knn_classify's shape (the exact path is cosine_topk's
+    block kernel with the whole corpus as the query block, every ordered
+    pair scored in numpy; pass ``neighbors=`` from ivf_query for the
+    sublinear path at web scale — corpus-as-queries is exactly the case
+    where you would); the audit tail is a |labels|-row aggregate.
     """
-    # corpus-as-queries: the exact neighbor pass is symmetric, so it
-    # scores only the id_a < id_b half and mirrors (see cosine_topk)
     res = knn_classify(
         corpus, corpus, k=k, vec_col=vec_col, id_col=id_col,
         label_col=label_col, neighbors=neighbors,
-        symmetric=neighbors is None,
     )
     return res.groupBy(F.col("true_label").alias("label")).agg(
         F.count("*").cast("long").alias("n"),

@@ -1,24 +1,36 @@
 """Similarity search over embedding columns (array<float>).
 
 - ``cosine_topk``: brute-force exact top-k — the correctness baseline. The
-  query side is expected to be small (it is broadcast); the corpus streams
-  through one narrow projection, dot products run as built-in higher-order
-  functions (zip_with + aggregate; CodegenFallback, so they evaluate
-  interpreted), and top-k per query is a window rank — no driver collect
+  query side is one broadcast row (it is expected to be small); the corpus
+  is exchanged once into blocks, and one Arrow block kernel
+  (``mapInArrow``) scores each |Q| x |block| product in numpy, in the
+  fold's exact order, keeping a local top-k per query per block.  Only
+  that local top-k reaches the per-query window rank — no driver collect
   anywhere.
+- ``dot`` / ``norm`` / ``cosine``: the per-pair fold (built-in
+  higher-order functions, zip_with + aggregate; CodegenFallback, so they
+  evaluate interpreted) for callers that score candidate rows a join
+  produces (IVF/LSH probes, hard negatives, semantic dedup), not a
+  |Q| x |C| cross product.
 - ``lsh_topk``: the scale path — sign-of-hyperplane LSH buckets via
   deterministic md5-derived planes; only colliding buckets join. Recall is
   tunable with ``num_planes`` (fewer planes = bigger buckets = higher
   recall) and ``probe_bits`` multi-probe.
 
 At 100 TB / 1e9+ vectors the brute-force variant is a deliberate cross
-join: cost = |Q| x |corpus| dot products, linear in corpus size and
-embarrassingly parallel (corpus partitions x broadcast queries) — right for
-small |Q|. The LSH variant cuts the per-query candidate set by ~2^planes.
+product: cost = |Q| x |corpus| dot products, linear in corpus size and
+embarrassingly parallel (corpus blocks x one broadcast query block) —
+right for small |Q|. The LSH variant cuts the per-query candidate set by
+~2^planes.
 """
 
 from __future__ import annotations
 
+import functools
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
@@ -166,68 +178,201 @@ def cosine_with_norms(
     return dot(a, b) / (an * bn)
 
 
+# Pair scores per kernel slice: every |Q| x slice temporary of the block
+# kernel holds at most this many doubles (16 MB).
+_SLICE_CELLS = 1 << 21
+# A raw cosine more than 1e-6 below the k-th best cannot round (HALF_UP,
+# 6 places) to a value that reaches it, so a 2e-6 margin keeps a superset
+# of every row that can survive the final rank.
+_ROUND_MARGIN = 2e-6
+
+
+def fold_dot(q: np.ndarray, c: np.ndarray) -> np.ndarray:
+    """|q| x |c| dot products of two row-vector matrices in :func:`dot`'s
+    order, ``((0.0 + q0*c0) + q1*c1) + ...``: one IEEE multiply and one
+    add per term, column by column, so each value is bit-identical to the
+    fold.  Never a matmul, BLAS or einsum: they block, reorder or fuse the
+    sum, and ``q @ c.T`` differed from the fold on 13% of sf0.1 pairs."""
+    acc = np.zeros((q.shape[0], c.shape[0]))
+    for i in range(q.shape[1]):
+        acc = acc + q[:, i, None] * c[None, :, i]
+    return acc
+
+
+def fold_norm(v: np.ndarray) -> np.ndarray:
+    """Row norms in :func:`norm`'s order (the same term-by-term fold)."""
+    acc = np.zeros(v.shape[0])
+    for i in range(v.shape[1]):
+        acc = acc + v[:, i] * v[:, i]
+    return np.sqrt(acc)
+
+
+def _vector_rows(v: pa.ListArray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """A list<double> column as (lens, starts, values): row r's elements
+    are ``values[starts[r]:starts[r] + lens[r]]``; ``lens`` is -1 where the
+    fold scores null (a null vector or a null element)."""
+    lens = pc.fill_null(pc.list_value_length(v), -1).to_numpy().astype(np.int64)
+    sizes = np.maximum(lens, 0)
+    starts = np.cumsum(sizes) - sizes
+    flat = v.flatten()
+    if flat.null_count:
+        row = np.repeat(np.arange(len(lens)), sizes)
+        lens[row[flat.is_null().to_numpy(zero_copy_only=False)]] = -1
+    return lens, starts, flat.to_numpy(zero_copy_only=False)
+
+
+def _block_candidates(
+    q: pa.StructArray, c: pa.StructArray, k: int
+) -> pa.RecordBatch | None:
+    """Score every (query, corpus row) pair of one block and keep, per
+    query, the pairs whose raw cosine lies within ``_ROUND_MARGIN`` of its
+    k-th best in the block -> (query_id, neighbor_id, dot, den).
+
+    A pair the fold scores null (null vector or element, mismatched
+    lengths) has a null dot and ranks last; a NaN cosine ranks first; a
+    pair with a zero ``den`` is always kept, so Spark's own division
+    decides it (DIVIDE_BY_ZERO under ANSI, else a null that ranks last).
+    Self ids are dropped.  The corpus rows are scored in slices of at
+    most ``_SLICE_CELLS`` pairs; a running k best per query carries the
+    threshold across slices."""
+    n_q, n_c = len(q), len(c)
+    if not n_q or not n_c or k < 1:
+        return None
+    qid, qvec = q.flatten()
+    cid, cvec = c.flatten()
+    codes = pa.concat_arrays([qid, cid.cast(qid.type)]).dictionary_encode()
+    codes = codes.indices.to_numpy()
+    qcode, ccode = codes[:n_q], codes[n_q:]
+    qlen, qst, qval = _vector_rows(qvec)
+    clen, cst, cval = _vector_rows(cvec)
+    # one matrix (and its norms) per vector length present on both sides
+    qmats = []
+    for d in np.intersect1d(qlen[qlen >= 0], clen[clen >= 0]):
+        rows = np.flatnonzero(qlen == d)
+        mat = qval[qst[rows, None] + np.arange(d)]
+        qmats.append((d, rows, mat, fold_norm(mat)))
+    best = np.full((n_q, min(k, n_c)), -np.inf)
+    width = max(1, _SLICE_CELLS // n_q)
+    found = []
+    for s in range(0, n_c, width):
+        m = min(width, n_c - s)
+        dot, den = np.zeros((n_q, m)), np.zeros((n_q, m))
+        scored = np.zeros((n_q, m), dtype=bool)
+        for d, rows, qm, qn in qmats:
+            cols = np.flatnonzero(clen[s : s + m] == d)
+            cm = cval[cst[s + cols, None] + np.arange(d)]
+            at = np.ix_(rows, cols)
+            dot[at] = fold_dot(qm, cm)
+            den[at] = qn[:, None] * fold_norm(cm)[None, :]
+            scored[at] = True
+        with np.errstate(divide="ignore", invalid="ignore"):
+            key = dot / den
+        key[np.isnan(key)] = np.inf
+        # a zero den is Spark's to divide: kept always, and it ranks (as a
+        # null) below every score, so it never raises the threshold
+        zero = scored & (den == 0)
+        own = qcode[:, None] == ccode[None, s : s + m]
+        key[~scored | zero | own] = -np.inf
+        kk = best.shape[1]
+        best = -np.partition(-np.hstack([best, key]), kk - 1, axis=1)[:, :kk]
+        near = key >= best.min(axis=1)[:, None] - _ROUND_MARGIN
+        qi, ci = np.nonzero((near | zero) & ~own)
+        found.append(
+            (qi, ci + s, dot[qi, ci], den[qi, ci], scored[qi, ci], key[qi, ci], zero[qi, ci])
+        )
+    qi, ci, dot, den, scored, key, zero = (np.concatenate(f) for f in zip(*found))
+    keep = (key >= best.min(axis=1)[qi] - _ROUND_MARGIN) | zero
+    return pa.RecordBatch.from_arrays(
+        [
+            qid.take(qi[keep]),
+            cid.take(ci[keep]),
+            pa.array(dot[keep], mask=~scored[keep]),
+            pa.array(den[keep], mask=~scored[keep]),
+        ],
+        names=["query_id", "neighbor_id", "dot", "den"],
+    )
+
+
+def _topk_blocks(batches, k: int):
+    """mapInArrow body: each input row is (query block, corpus block)."""
+    for batch in batches:
+        qs, cs = batch.column("q"), batch.column("c")
+        for i in range(batch.num_rows):
+            out = _block_candidates(qs[i].values, cs[i].values, k)
+            if out is not None:
+                yield out
+
+
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 10,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    symmetric: bool = False,
 ) -> DataFrame:
     """Exact top-k neighbors per query: (query_id, neighbor_id, cosine, rank).
 
     Ties break on neighbor id; cosine is rounded to 6 places BEFORE ranking
     so the ordering is reproducible across engines' float summation.
-    Self-matches (same id) are excluded.  Norms are computed once per row
-    before the cross join; each pair then runs one :func:`dot` fold.
+    Self-matches (same id) are excluded, and so are null ids.
 
-    ``symmetric=True`` is a caller-asserted contract that ``queries`` IS
-    ``corpus`` (same rows, same filters — the corpus-as-queries audits:
-    label-noise, reciprocal kNN).  Cosine is symmetric, so the kernel then
-    scores only the id_a < id_b half of the cross join and mirrors each
-    row map-side — HALF the dominant per-pair work.  Bit-identical: the
-    fold runs the same k-order either direction (IEEE multiplication
-    commutes term-by-term) and qn*cn commutes, so the mirrored cosine
-    equals the one the full join would compute.
+    One block kernel (the REPOSE shape: each partition keeps a local
+    top-k, only that crosses to the global rank):
+
+    - the queries are ONE broadcast row, ``collect_list`` of (id, vector);
+    - the corpus is exchanged once into ``defaultParallelism`` blocks,
+      keyed by a hash of the id: ``repartitionById`` sends block b to
+      partition b (a repartition by number, which AQE does not coalesce),
+      and one ``collect_list`` row per partition is the block;
+    - ``broadcast(query row) x blocks`` feeds one ``mapInArrow``
+      (:func:`_block_candidates`): numpy scores the |Q| x |block| dot
+      products and norms in the fold's column order
+      (:func:`fold_dot`, bit-identical to :func:`dot`) and keeps, per query,
+      the pairs within ``_ROUND_MARGIN`` of its k-th best raw cosine;
+    - Spark divides ``dot / den`` itself (so a zero norm fails or nulls
+      exactly as the fold does), rounds, and ranks with
+      ``row_number() <= k`` over (cosine desc, neighbor_id asc).
+
+    Scale: |Q| x |corpus| dot products, linear in the corpus and
+    embarrassingly parallel over blocks; the query block must fit one
+    broadcast row (the same contract as a broadcast query side), and only
+    about k rows per query per block cross the Python boundary.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-    ).withColumn("qn", norm("qv"))
-    c = ensure_parallelism(corpus).select(
-        F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cv")
-    ).withColumn("cn", norm("cv"))
-    pair_filter = (
-        (F.col("query_id") < F.col("neighbor_id"))
-        if symmetric
-        else (F.col("query_id") != F.col("neighbor_id"))
+    def rows(df: DataFrame) -> DataFrame:
+        return df.filter(F.col(id_col).isNotNull()).select(
+            F.struct(
+                F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v")
+            ).alias("r")
+        )
+
+    n = corpus.sparkSession.sparkContext.defaultParallelism
+    q = rows(queries).agg(F.collect_list("r").alias("q"))
+    blocks = (
+        rows(corpus)
+        .withColumn("block", F.pmod(F.hash("r.id"), F.lit(n)))
+        .repartitionById(n, "block")
+        .groupBy("block")
+        .agg(F.collect_list("r").alias("c"))
     )
-    pairs = F.broadcast(q).crossJoin(c).filter(pair_filter)
-    scored = pairs.select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            cosine_with_norms(
-                F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")
-            ),
-            6,
-        ).alias("cosine"),
+    schema = T.StructType(
+        [
+            T.StructField("query_id", queries.schema[id_col].dataType),
+            T.StructField("neighbor_id", corpus.schema[id_col].dataType),
+            T.StructField("dot", T.DoubleType()),
+            T.StructField("den", T.DoubleType()),
+        ]
     )
-    if symmetric:
-        # mirror each scored half-pair map-side; the cosine alias is
-        # referenced by both structs, so CollapseProject cannot inline
-        # (and re-evaluate) the kernel into the explode
-        scored = scored.select(
-            F.explode(
-                F.array(
-                    F.struct("query_id", "neighbor_id", "cosine"),
-                    F.struct(
-                        F.col("neighbor_id").alias("query_id"),
-                        F.col("query_id").alias("neighbor_id"),
-                        F.col("cosine"),
-                    ),
-                )
-            ).alias("p")
-        ).select("p.*")
+    scored = (
+        F.broadcast(q)
+        .crossJoin(blocks)
+        .select("q", "c")
+        .mapInArrow(functools.partial(_topk_blocks, k=k), schema)
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(F.col("dot") / F.col("den"), 6).alias("cosine"),
+        )
+    )
     w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -686,8 +831,8 @@ def quantized_topk(
     computed directly on the integer codes: the dot product and both
     norms are EXACT int64 sums (order-independent — no float-summation
     reproducibility hazard at all), with one sqrt+divide per pair as the
-    only float math. Same broadcastxcorpus shape as cosine_topk; the
-    integer kernel is also what a SIMD int8 GEMM would run on a real
+    only float math. A broadcast(queries) x corpus scan, as cosine_topk
+    was before its block kernel; the integer kernel is also what a SIMD int8 GEMM would run on a real
     serving path.
     """
     q = _with_int8_codes(
@@ -888,8 +1033,7 @@ def hard_negatives(
     {'pos', 'neg'}; cosine rounded to 6dp BEFORE ranking and ties broken
     on neighbor id, so ordering is engine-stable.  Self-matches excluded.
 
-    Scale shape: identical to :func:`cosine_topk` — broadcast(queries) x
-    corpus scan, per-pair work is one dot product with norms bound per
+    Scale shape: broadcast(queries) x corpus scan, per-pair work is one dot product with norms bound per
     side, top-k per (query, role) is a window rank with WindowGroupLimit
     pushdown.  The corpus is never shuffled; swap the scored candidate
     source for an IVF probe join to make it sublinear.
@@ -984,40 +1128,32 @@ def reciprocal_topk_pairs(
     ``neighbors=`` injects a precomputed (query_id, neighbor_id, cosine,
     rank) frame — e.g. ivf_query / lsh_topk output — which is the scale
     path: the default exact :func:`cosine_topk` over the whole corpus is
-    the eval baseline and broadcasts the query side (fine at eval sizes,
-    not at 1e9 vectors).  The mutuality test itself is one equi self-join
-    of the |corpus|·k neighbor list on the (id, id) pair key — never a
-    vector shuffle.
+    the eval baseline and broadcasts the query block (fine at eval sizes,
+    not at 1e9 vectors).  The mutuality test reads the |corpus|·k
+    neighbor list ONCE: one aggregate over the unordered pair
+    (least, greatest) takes the cosine and rank_ab from the
+    query_id < neighbor_id row and rank_ba from the other direction, and
+    keeps the pairs that have both ranks — never a self-join, never a
+    vector shuffle, and nothing to pin.
     """
-    from . import _persist_scoped
-
-    # The neighbor list feeds BOTH sides of the mutuality self-join; an
-    # unpinned plan re-ran the entire retrieval (the |Q|x|corpus| scored
-    # cross join + window, or the injected ANN pipeline) once per side —
-    # the r13 before plan held 2 BroadcastNestedLoopJoins and 2 Windows.
-    # The pinned frame is |corpus|·k rows by construction, bounded.
-    nbrs = _persist_scoped(
+    nbrs = (
         neighbors
         if neighbors is not None
-        # symmetric: queries IS corpus here, so the exact path scores
-        # only the id_a < id_b half and mirrors (bit-identical, half the
-        # per-pair kernel work — see cosine_topk)
-        else cosine_topk(
-            corpus, corpus, k=k, vec_col=vec_col, id_col=id_col, symmetric=True
+        else cosine_topk(corpus, corpus, k=k, vec_col=vec_col, id_col=id_col)
+    )
+    fwd = F.col("query_id") < F.col("neighbor_id")
+    return (
+        nbrs.groupBy(
+            F.least("query_id", "neighbor_id").alias("id_a"),
+            F.greatest("query_id", "neighbor_id").alias("id_b"),
         )
+        .agg(
+            F.max(F.when(fwd, F.col("cosine"))).alias("cosine"),
+            F.max(F.when(fwd, F.col("rank"))).alias("rank_ab"),
+            F.max(F.when(~fwd, F.col("rank"))).alias("rank_ba"),
+        )
+        .filter(F.col("rank_ab").isNotNull() & F.col("rank_ba").isNotNull())
     )
-    fwd = nbrs.filter(F.col("query_id") < F.col("neighbor_id")).select(
-        F.col("query_id").alias("id_a"),
-        F.col("neighbor_id").alias("id_b"),
-        "cosine",
-        F.col("rank").alias("rank_ab"),
-    )
-    rev = nbrs.filter(F.col("query_id") > F.col("neighbor_id")).select(
-        F.col("neighbor_id").alias("id_a"),
-        F.col("query_id").alias("id_b"),
-        F.col("rank").alias("rank_ba"),
-    )
-    return fwd.join(rev, ["id_a", "id_b"])
 
 
 def kmeans_inertia(
@@ -1320,10 +1456,10 @@ def mrl_recall(
     the bm25 idiom), identical to :func:`cosine_topk` because each
     per-dim pass IS cosine_topk on the sliced frame.
 
-    Scale: |dims| brute-force passes, each a broadcast of the query
-    sample against one corpus scan — embarrassingly parallel, no
-    corpus-side shuffle (cosine_topk's per-query top-k window partitions
-    by query).  At 1e9 vectors you'd swap the exact passes for the IVF
+    Scale: |dims| brute-force passes, each one broadcast query block
+    against one block exchange of the corpus (the corpus is never
+    exchanged by id; cosine_topk's per-query top-k window partitions by
+    query).  At 1e9 vectors you'd swap the exact passes for the IVF
     probe (ivf_topk) per dim; the comparison logic is unchanged.
     """
     from . import _persist_scoped

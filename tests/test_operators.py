@@ -2372,6 +2372,26 @@ def test_reciprocal_topk_pairs_mutuality(spark, emb):
     assert {(r["id_a"], r["id_b"]) for r in out} == want
 
 
+def test_reciprocal_topk_pairs_injected_neighbors(spark, emb):
+    # the neighbors= path (an ANN list) goes through the same one-pass
+    # pair aggregate: cosine and rank_ab from the a < b row, rank_ba from
+    # the other direction, only pairs listed both ways
+    nbrs = similarity.ivf_topk(emb, emb, k=5, centroid_stride=20, nprobe=2)
+    listed = {
+        (r["query_id"], r["neighbor_id"]): (r["cosine"], r["rank"])
+        for r in nbrs.collect()
+    }
+    want = {
+        (a, b, cos, rank, listed[(b, a)][1])
+        for (a, b), (cos, rank) in listed.items()
+        if a < b and (b, a) in listed
+    }
+    assert want, "the IVF lists must hold at least one mutual pair"
+    got = similarity.reciprocal_topk_pairs(emb, k=5, neighbors=nbrs).collect()
+    assert {tuple(r) for r in got} == want
+    assert len(got) == len(want)
+
+
 def test_gopher_gate_report_consistent_with_rules(spark, docs):
     got = {r["source"]: r for r in
            text.gopher_gate_report(docs, strata_col="source").collect()}

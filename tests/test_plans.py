@@ -761,16 +761,23 @@ def test_ab_cuped_single_user_shuffle_no_cartesian(spark):
 
 
 def test_mrl_recall_broadcasts_queries_no_corpus_shuffle(spark):
-    # r9: every per-dim brute pass broadcasts the query sample against a
-    # corpus scan (BroadcastNestedLoopJoin by construction of the exact
-    # top-k); the corpus itself is never hash-exchanged — the only wide
-    # exchanges partition by query_id for the per-query top-k windows
+    # every per-dim exact pass is cosine_topk's block kernel: the query
+    # sample goes in as ONE broadcast block (a BroadcastNestedLoopJoin
+    # against the corpus blocks), and the corpus crosses exactly one block
+    # exchange per pass; it is never hash-exchanged by id — the only other
+    # wide exchanges partition by query_id for the per-query top-k windows
     from staticql_spark.operators.similarity import mrl_recall
 
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
     p = plan(mrl_recall(emb, dims=(8, 16), k=3, query_stride=50))
     assert "CartesianProduct" not in p, p
-    assert re.findall(r"BroadcastNestedLoopJoin", p), p
+    passes = len(re.findall(r"\(\d+\) MapInArrow", p))
+    assert passes == 3, p  # the full-dim list + one per truncated dim
+    # the broadcast (build) side of each pass's nested loop is its query
+    # block; the other nested loops are the 1-row count cross joins
+    query_blocks = set(re.findall(r"BroadcastNestedLoopJoin Cross BuildLeft \((\d+)\)", p))
+    assert len(query_blocks) == passes, p
+    assert len(re.findall(r"Arguments: shufflepartitionidpassthrough", p)) == passes, p
     assert not re.findall(r"Exchange hashpartitioning\(vec_id", p), p
 
 
@@ -979,6 +986,19 @@ def test_verify_jaccard_builds_on_shingle_side(spark):
     assert p.count("ShuffledHashJoin Inner BuildRight") == 2, p
     assert "SortMergeJoin" not in p, p
     assert "BroadcastHashJoin" not in p, p
+
+
+@pytest.mark.parametrize("key", ["ann_cosine_topk", "ann_label_noise", "ann_rnn_pairs"])
+def test_exact_topk_is_one_arrow_block_kernel(spark, key):
+    # each exact retrieval is ONE mapInArrow over (broadcast query block x
+    # corpus blocks): no Generate mirroring a half-scored pair set, and no
+    # zip_with fold in any pair projection; ann_rnn_pairs reads its
+    # neighbour list once (one kernel, not one per side of a self-join)
+    p = plan(entrymod.queries()[key](spark, SF_SMOKE))
+    assert len(re.findall(r"\(\d+\) MapInArrow", p)) == 1, p
+    assert len(re.findall(r"Arguments: shufflepartitionidpassthrough", p)) == 1, p
+    assert "Generate" not in p, p
+    assert "zip_with" not in p, p
 
 
 @pytest.mark.parametrize(
